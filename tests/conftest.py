@@ -90,8 +90,6 @@ SLOW_CALLS = {
     "test_packing.py::test_spfhp_assignments_random_vs_reference",
     "test_packing.py::test_global_offsets_property_random_frames",
     "test_pii.py::test_property_composed_docs",
-    "test_pipeline_e2e.py::test_classification_stage",
-    "test_pipeline_e2e.py::test_write_outputs_partitioned",
     "test_property_text.py::test_duplicated_spans_match_bruteforce",
     "test_property_text.py::test_trigram_fuzzy_property",
     "test_property_text.py::test_quantize_engine_parity_random_vectors",

@@ -24,7 +24,8 @@ def box(lng0, lat0, lng1, lat1):
 
 
 @pytest.fixture(scope="module")
-def result(spark):
+def inputs(spark):
+    """``run_auto_pipeline``'s arguments over the domain fixtures."""
     pois, mentions, snapshots = make_domain_fixtures(n_pois=40)
     # pin coordinates inside paris for the spatial stage and give some
     # POIs tags for the collections stage
@@ -77,10 +78,22 @@ def result(spark):
         [tuple(r[f.name] for f in DOMAIN["source_catalog"].fields) for r in cat_rows],
         DOMAIN["source_catalog"],
     )
-    return P.run_auto_pipeline(
+    return (
         poi_df, areas, cand_df, profiles, catalog, snap_df,
         F.lit(AS_OF.isoformat()).cast("timestamp"),
     )
+
+
+def _result(inputs):
+    res = P.run_auto_pipeline(*inputs)
+    try:
+        yield res
+    finally:
+        res.release()
+
+
+#: one cycle shared by the stage tests, released at module teardown
+result = pytest.fixture(scope="module", name="result")(_result)
 
 
 def test_spatial_stage(result):
@@ -142,21 +155,69 @@ def test_ingest_places(spark):
     assert "pl5" not in out      # name missing
 
 
+def _python_udf_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+
+
+def test_outputs_read_the_scoring_boundary(result):
+    """Mention scoring's Python UDFs run upstream of the materialized
+    boundaries and cannot re-run in a plan built on them."""
+    # control: the lazy spatial stage still evaluates its pandas UDF
+    assert _python_udf_nodes(result.poi_associated)
+    assert _python_udf_nodes(result.poi_scored) == []
+    assert _python_udf_nodes(result.collections) == []
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    # the JVM map is weak-valued, so unrelated entries left by earlier
+    # tests may vanish mid-test: compare id sets, not sizes
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _rdd_ids(frames) -> set[int]:
+    return {f._jdf.queryExecution().analyzed().rdd().id() for f in frames}
+
+
 def test_write_outputs_partitioned(spark, result, tmp_path):
+    """Runs after every other test of ``result``: ``write_outputs``
+    releases the result it writes, so the expected counts are taken
+    before the write."""
     from trendr_data_pipeline_spark.pipeline import write_outputs
 
+    n_poi, n_men = result.poi_scored.count(), result.mentions_accepted.count()
+    before = _persistent_rdd_ids(spark)
+    boundaries = _rdd_ids(result.boundaries)
+    assert len(boundaries) == 2 and boundaries <= before
     out = str(tmp_path / "out")
     write_outputs(result, out)
+    assert _persistent_rdd_ids(spark) <= before - boundaries and not result.boundaries
     poi_back = spark.read.parquet(f"{out}/poi_scored")
-    assert poi_back.count() == result.poi_scored.count()
+    assert poi_back.count() == n_poi
     # partition pruning reaches the file listing: one city reads one dir
     import os
 
     dirs = [d for d in os.listdir(f"{out}/poi_scored") if d.startswith("city_slug=")]
     assert len(dirs) >= 2
     men_back = spark.read.parquet(f"{out}/source_mention")
-    assert men_back.count() == result.mentions_accepted.count()
+    assert men_back.count() == n_men
     assert "dt" in men_back.columns
+
+
+def test_unwritten_result_is_released(spark, inputs):
+    """A cycle persists its two boundaries and nothing else. A result
+    that is never written is freed by ``release()``, which the module
+    fixture's teardown calls, and releasing twice is a no-op."""
+    before = _persistent_rdd_ids(spark)
+    fixture = _result(inputs)
+    res = next(fixture)
+    assert _persistent_rdd_ids(spark) - before == _rdd_ids(res.boundaries)
+    assert len(res.boundaries) == 2
+    with pytest.raises(StopIteration):
+        next(fixture)  # teardown
+    assert _persistent_rdd_ids(spark) <= before and not res.boundaries
+    res.release()
+    assert _persistent_rdd_ids(spark) <= before
 
 
 def test_places_payload_remap(spark):

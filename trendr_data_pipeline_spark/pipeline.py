@@ -3,18 +3,25 @@
 The reference orchestrates H3-INGEST → MENTIONS → CLASSIFY →
 TRENDING as subprocesses exchanging stdout text and database state
 (``run_pipeline.py:549-614``); here each step is a DataFrame
-transformation sharing one session — stage boundaries are shuffles,
-not process exits, and the "IR" between steps is a DataFrame.
+transformation sharing one session — steps are not process exits, and
+the "IR" between steps is a DataFrame.
 
-``run_auto_pipeline`` is side-effect-free: it takes input DataFrames
-and returns every stage's output. Sinks (parquet/MERGE) are the
-caller's choice — see ``operators/ingestion.upsert_latest`` and
+``run_auto_pipeline`` takes input DataFrames and returns every
+stage's output. The two outputs that several others read — the capped
+accepted mentions and the scored POIs — are stage boundaries: they are
+computed eagerly, once, and stored as local checkpoints, so mention
+scoring runs once per cycle and every downstream plan starts from the
+stored rows, as the reference's steps start from its database tables.
+The result owns those checkpoints until it is released:
+``write_outputs`` releases it after its last write, and a caller that
+never writes calls ``PipelineResult.release``. Sinks (parquet/MERGE)
+are the caller's choice — see ``operators/ingestion.upsert_latest`` and
 ``streaming/jobs.merge_sink``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,8 +44,26 @@ from .operators.mentions import score_candidates, windowed_dedup
 from .operators.spatial import associate_pois
 
 
+def _materialize(df: DataFrame) -> DataFrame:
+    """A stage boundary: compute ``df`` now, once, and cut its lineage,
+    so every plan built on the returned frame reads the stored rows."""
+    return df.localCheckpoint(eager=True)
+
+
+def _release(boundary: DataFrame) -> None:
+    """Free one frame made by :func:`_materialize`.
+    ``DataFrame.unpersist`` does not reach a local checkpoint: its rows
+    are a persisted RDD under the frame's ``LogicalRDD`` leaf, so that
+    RDD is unpersisted, blocking until its blocks are gone."""
+    boundary._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 @dataclass
 class PipelineResult:
+    """Every stage's output of one cycle. ``boundaries`` are the
+    materialized frames the outputs read from; the outputs built on
+    them stay readable until :meth:`release`."""
+
     poi_ingested: DataFrame
     poi_associated: DataFrame
     mentions_accepted: DataFrame
@@ -46,6 +71,12 @@ class PipelineResult:
     score_percentiles: DataFrame
     status_transitions: DataFrame
     collections: DataFrame
+    boundaries: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Free the materialized boundaries. Idempotent."""
+        while self.boundaries:
+            _release(self.boundaries.pop())
 
 
 #: collection templates — deterministic path of
@@ -128,7 +159,14 @@ def run_auto_pipeline(
     city: str = "Paris",
 ) -> PipelineResult:
     """MENTIONS → CLASSIFY → COLLECTIONS over already-ingested POIs
-    (ingestion is `ingest_places`, driven by its own fixture)."""
+    (ingestion is `ingest_places`, driven by its own fixture).
+
+    Computes two stage boundaries before it returns, each once: the
+    capped accepted mentions, then the scored POIs built from them (the
+    result's ``boundaries``). The percentiles, transitions and
+    collections are lazy plans over the scored POIs. The caller
+    releases the result — ``write_outputs`` does — and reads nothing
+    from it afterwards."""
     # spatial association (J1)
     associated = associate_pois(poi, urban_areas)
 
@@ -148,13 +186,17 @@ def run_auto_pipeline(
         .withColumn("match_score", F.col("name_sc"))
         .withColumn("created_at", as_of)
     )
-    deduped = cap_accepted_per_poi(windowed_dedup(accepted, as_of), limit_per_poi)
+    deduped = _materialize(cap_accepted_per_poi(windowed_dedup(accepted, as_of), limit_per_poi))
 
     # classification (§3.3): one-pass star join
     mentions_for_scoring = deduped.select(
         "poi_id", "source_type", "authority_weight", "match_score", "w_time", "created_at"
     )
-    scored = classify(associated, mentions_for_scoring, snapshots, as_of)
+    try:
+        scored = _materialize(classify(associated, mentions_for_scoring, snapshots, as_of))
+    except BaseException:
+        _release(deduped)
+        raise
     pct = score_percentiles(scored)
     transitions = status_transitions(
         poi.select("id", "eligibility_status"), scored
@@ -181,27 +223,34 @@ def run_auto_pipeline(
         score_percentiles=pct,
         status_transitions=transitions,
         collections=cols,
+        boundaries=[deduped, scored],
     )
 
 
 def write_outputs(result: PipelineResult, out_dir: str) -> None:
     """Persist stage outputs in the SCALING.md layout: facts
     partitioned by their pruning key (mentions by created date, scored
-    POIs by city), small outputs as single files. Overwrite semantics
-    per partition directory — MERGE-equivalent for full-refresh runs."""
+    POIs by city), small outputs as single files. Each output directory
+    is replaced whole: under Spark's default static partition-overwrite
+    mode, ``mode("overwrite").partitionBy(...)`` drops every partition
+    this cycle does not write.
+
+    This is the cycle's last consumer: it releases ``result`` after its
+    last write, and also when a write fails."""
     import os
 
-    from pyspark.sql import functions as F
-
-    (
-        result.mentions_accepted.withColumn("dt", F.to_date("created_at"))
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(os.path.join(out_dir, "source_mention"))
-    )
-    (
-        result.poi_scored.write.mode("overwrite")
-        .partitionBy("city_slug")
-        .parquet(os.path.join(out_dir, "poi_scored"))
-    )
-    result.collections.write.mode("overwrite").parquet(os.path.join(out_dir, "collections"))
+    try:
+        (
+            result.mentions_accepted.withColumn("dt", F.to_date("created_at"))
+            .write.mode("overwrite")
+            .partitionBy("dt")
+            .parquet(os.path.join(out_dir, "source_mention"))
+        )
+        (
+            result.poi_scored.write.mode("overwrite")
+            .partitionBy("city_slug")
+            .parquet(os.path.join(out_dir, "poi_scored"))
+        )
+        result.collections.write.mode("overwrite").parquet(os.path.join(out_dir, "collections"))
+    finally:
+        result.release()
