@@ -110,7 +110,6 @@ RENAMES_R8 = {
     "t14_split_assign": "c34_split_assign",
     "t15_stratified_sample": "c35_stratified_sample",
     "p03_type_allowlist": "zp03_type_allowlist",
-    "p06_frame_sampling": "zp06_frame_sampling",
     # third wave: shuffle-shards and token-entropy gates rotated in
     # on creation
     "e05_decayed_user_value": "ze05_decayed_user_value",
@@ -120,7 +119,7 @@ RENAMES_R8 = {
 # ---------------------------------------------------------------------------
 # REGISTRY V1 — the name freeze (r9, verdict item 1).
 #
-# Every one of these 89 names carries a driver signature: the r8 window
+# Every one of these names carries a driver signature: the r8 window
 # (CORRECTNESS_r08.json) signed c05→s06, and every name outside that
 # window is either a z-rotated signed name or a documented r4-r6 legacy
 # signature (tests/test_driver_contract.py pins the lineage). Nothing is
@@ -134,41 +133,44 @@ RENAMES_R8 = {
 #      attestation (the r7 t06-t13 mistake, never again).
 # Future CORRECTNESS files therefore stay longitudinally comparable:
 # r9's name set is r8's, plus deliberate insertions, each with a z-push
-# record here.
+# record here. The only other way a name leaves is a declared feature
+# removal: deleting the multimodal, BPE and corpus-pipeline queries
+# took out c23, p05, p07, x15, x19 and zp06 (and their z-push
+# records), leaving 83 of the 89.
 # ---------------------------------------------------------------------------
 REGISTRY_V1_FROZEN = (
     "c05_streaming_interval_join", "c18_streaming_momentum",
-    "c23_corpus_pipeline", "c24_ivfpq_topk", "c25_span_removal",
-    "c26_winnowing_fingerprints", "c27_fingerprint_matches",
-    "c28_bigram_perplexity", "c29_doc_chunks", "c30_importance_weights",
-    "c31_filtered_ann", "c32_containment_pairs", "c33_snapshot_diff",
-    "c34_split_assign", "c35_stratified_sample", "c36_shuffle_shards",
-    "c37_token_entropy", "d01_exact_dedup_groups", "d02_jaccard_pairs",
-    "d03_minhash_lsh_pairs", "d04_simhash_buckets", "d05_ngram_jaccard",
-    "d06_embedding_near_dup", "e01_window_suite", "e02_sessionization",
-    "e03_asof_last_purchase", "e06_value_percentiles", "e08_interval_join",
-    "e09_time_rollup", "m01_cosine_topk", "m03_ivf_topk",
-    "p02_streaming_sessions", "p04_keyword_trends", "p05_photo_quality",
-    "p07_audio_windows", "p08_streaming_daily_stats", "q01_pricing_summary",
-    "q02_revenue_by_region", "q03_top_customers_per_nation",
-    "q06_rollup_region_nation", "q07_distinct_counts", "q09_filtered_scan",
-    "r01_classifier_scores", "r02_windowed_dedup", "r03_decision_ladder",
-    "r04_novelty_scores", "s01_flexible_date_parse", "s02_url_functions",
-    "s04_haversine_bands", "s06_ttl_due_filter", "s08_maxby_best_per_group",
-    "t01_token_stats", "t02_language_id", "t03_quality_score",
-    "t05_corpus_clean", "t16_compression_ratio", "x01_mention_pipeline",
-    "x02_ivf_fast_topk", "x03_dedup_components", "x04_sequence_packing",
+    "c24_ivfpq_topk", "c25_span_removal", "c26_winnowing_fingerprints",
+    "c27_fingerprint_matches", "c28_bigram_perplexity", "c29_doc_chunks",
+    "c30_importance_weights", "c31_filtered_ann", "c32_containment_pairs",
+    "c33_snapshot_diff", "c34_split_assign", "c35_stratified_sample",
+    "c36_shuffle_shards", "c37_token_entropy", "d01_exact_dedup_groups",
+    "d02_jaccard_pairs", "d03_minhash_lsh_pairs", "d04_simhash_buckets",
+    "d05_ngram_jaccard", "d06_embedding_near_dup", "e01_window_suite",
+    "e02_sessionization", "e03_asof_last_purchase",
+    "e06_value_percentiles", "e08_interval_join", "e09_time_rollup",
+    "m01_cosine_topk", "m03_ivf_topk", "p02_streaming_sessions",
+    "p04_keyword_trends", "p08_streaming_daily_stats",
+    "q01_pricing_summary", "q02_revenue_by_region",
+    "q03_top_customers_per_nation", "q06_rollup_region_nation",
+    "q07_distinct_counts", "q09_filtered_scan", "r01_classifier_scores",
+    "r02_windowed_dedup", "r03_decision_ladder", "r04_novelty_scores",
+    "s01_flexible_date_parse", "s02_url_functions", "s04_haversine_bands",
+    "s06_ttl_due_filter", "s08_maxby_best_per_group", "t01_token_stats",
+    "t02_language_id", "t03_quality_score", "t05_corpus_clean",
+    "t16_compression_ratio", "x01_mention_pipeline", "x02_ivf_fast_topk",
+    "x03_dedup_components", "x04_sequence_packing",
     "x06_budget_selection", "x07_tfidf_topk", "x08_unigram_perplexity",
     "x09_embedding_quantize", "x10_temperature_mix", "x11_pq_topk",
     "x12_pq_fast_topk", "x13_duplicated_spans", "x14_label_centroids",
-    "x15_bpe_merges", "x16_quality_classifier", "x17_quality_embedding_corr",
-    "x19_bpe_tokenize", "x20_hashed_vectors", "x21_semantic_dedup",
-    "x22_zipf_stats", "x24_ivfpq_fast_topk", "za01_pivot_priority_counts",
+    "x16_quality_classifier", "x17_quality_embedding_corr",
+    "x20_hashed_vectors", "x21_semantic_dedup", "x22_zipf_stats",
+    "x24_ivfpq_fast_topk", "za01_pivot_priority_counts",
     "za02_cube_region_segment", "za03_status_share_by_nation",
-    "za04_grouping_sets", "ze04_daily_event_stats", "ze05_decayed_user_value",
-    "ze07_props_extraction", "zp03_type_allowlist", "zp06_frame_sampling",
-    "zq04_returned_orders_by_priority", "zq05_customers_without_orders",
-    "zq08_set_ops_customers",
+    "za04_grouping_sets", "ze04_daily_event_stats",
+    "ze05_decayed_user_value", "ze07_props_extraction",
+    "zp03_type_allowlist", "zq04_returned_orders_by_priority",
+    "zq05_customers_without_orders", "zq08_set_ops_customers",
 )
 
 # r9 z-push records ONLY (frozen name → "z"+name, admitting a same-round
@@ -207,28 +209,24 @@ RENAMES_R10: dict[str, str] = {
     "q02_revenue_by_region": "zq02_revenue_by_region",
 }
 
-# r11 z-push records (same freeze rule; q01/p08/p07 were all
+# r11 z-push records (same freeze rule; q01/p08 were both
 # driver-signed under these names — q01 in every round through r10,
-# p07/p08 in r9/r10 windows).
+# p08 in r9/r10 windows).
 RENAMES_R11: dict[str, str] = {
-    # admits c51_pii_redaction (⊕T7 driver gate, synthetic-PII corpus)
+    # admitted c51_pii_redaction (⊕T7 driver gate, since removed)
     "q01_pricing_summary": "zq01_pricing_summary",
     # admits c52_token_bucket (SS1 batch twin)
     "p08_streaming_daily_stats": "zp08_streaming_daily_stats",
-    # admits c53_partition_pruned_stats (dynamic partition pruning)
-    "p07_audio_windows": "zp07_audio_windows",
     # admits c54_bucketed_join (co-bucketed shuffle-free join)
     "p04_keyword_trends": "zp04_keyword_trends",
 }
 
-# r12 z-push records (same freeze rule; p02/p05 were driver-signed
-# under these names in the r9-r11 windows).
+# r12 z-push records (same freeze rule; p02 was driver-signed
+# under that name in the r9-r11 windows).
 RENAMES_R12: dict[str, str] = {
     # admits c55_spatial_association (J1 spatial join, synthetic geometry)
     "p02_streaming_sessions": "zp02_streaming_sessions",
-    # admits c56_grid_scan_cycle (H3 scheduler state machine)
-    "p05_photo_quality": "zp05_photo_quality",
-    # admits c57_near_dup_screen (⊕SS13 streaming screen, driver-gated)
+    # admitted c57_near_dup_screen (⊕SS13 streaming screen, since removed)
     "m03_ivf_topk": "zm03_ivf_topk",
 }
 
@@ -256,17 +254,13 @@ RENAMES = {
 
 #: bench-only legs — z-named PAST the driver window at creation,
 #: deliberately oracle-less: approximate by design (zc42, its
-#: exactness pytest-pinned against the exact c42 gate), a
+#: exactness pytest-pinned against the exact c42 gate), or a
 #: driver-side-planned algorithm no SQL oracle can replay (zc50
-#: SPFHP, pytest-pinned against an independent per-doc simulation),
-#: or an iteratively-trained pyspark.ml model (zt02, r12 — held-out
-#: accuracy + heuristic-agreement bounds pytest-pinned; the x15/x16
-#: posture for names created after the freeze). The freeze contract
-#: test allowlists exactly these.
+#: SPFHP, pytest-pinned against an independent per-doc simulation).
+#: The freeze contract test allowlists exactly these.
 BENCH_ONLY_LEGS = (
     "zc42_bm25_capped_topk",
     "zc50_spfhp_packing",
-    "zt02_trained_langid",
 )
 
 
@@ -369,7 +363,7 @@ def main() -> None:
         n
         for n in timings
         if n.startswith(
-            ("c05_", "c18_", "c57_", "c58_", "c61_", "c62_", "zp02_", "zp08_")
+            ("c05_", "c18_", "c58_", "c61_", "c62_", "zp02_", "zp08_")
         )
     )
     # one-time staging work (absorbed by the first rep, excluded from

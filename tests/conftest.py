@@ -12,38 +12,20 @@ sys.path.insert(0, str(REPO))
 
 
 # ---------------------------------------------------------------------------
-# The slow set (r14, r13 verdict item 1). The driver's `pytest tests/
-# -x -q` must finish inside its verify window; VERIFY_r13 was TRUNCATED
-# at ~62% of a 3,272–3,951 s suite with zero failures. Every entry
-# below measured >10 s per call (first block) or 7.5–10 s (second
-# block, trimmed after the first timed default run left only ~5%
-# window margin) in the instrumented full run recorded in
-# OPTIMIZATION_r14.md (3,460 s total; these ~102 calls carry
-# ~2,460 s of it). They are SKIPPED by default and run with
-# SPARK_GRAFT_FULL_TESTS=1 — the full suite stays the local release
-# gate, executed (and timed) every round before close-out. Coverage
-# note: the driver separately re-runs every declared query against its
-# DuckDB oracle, so the heavy in-suite pins here are a third layer,
-# not the only one; the default set keeps ~500 tests including every
-# oracle-gate param and a determinism pin for 106 of 117 queries.
+# The slow set. Every entry below measured 7.5 s or more per call in
+# an instrumented full run (OPTIMIZATION_r14.md). They are SKIPPED by
+# default and run with SPARK_GRAFT_FULL_TESTS=1, which stays the local
+# release gate. Apart from the 3-SF schema sweep and three
+# text-function property sweeps, they test the corpus/LLM-data
+# operators. The POI pipeline's pins (streaming token
+# bucket, merge sinks, nightly-ops recipe, interval-join property and
+# the determinism of c05/c58/c61/c62) are not in the set: they run by
+# default. The default set keeps every oracle-gate param and a
+# determinism pin for 102 of the 108 registered queries.
 # Entries are nodeid fragments: "file::test" marks the whole function
 # (all params); "file::test[param]" marks one param.
 # ---------------------------------------------------------------------------
 SLOW_CALLS = {
-    # BPE trainer equivalence sweeps (adversarial/property corpora)
-    "test_bpe.py::test_batch_invariance_at_depth_256",
-    "test_bpe.py::test_batched_learner_matches_reference_on_adversarial_corpora",
-    "test_bpe.py::test_batched_learner_property_random_corpora",
-    "test_bpe.py::test_bpe_tokenize_pieces_roundtrip",
-    "test_bpe.py::test_batched_learner_matches_one_at_a_time_on_fixture",
-    "test_bpe.py::test_batching_reduces_spark_rounds",
-    "test_bpe.py::test_fast_learner_matches_greedy_reference_random_corpora",
-    # corpus pipeline composition sweeps
-    "test_corpus_pipeline.py::test_classifier_floor_and_mix_stages",
-    "test_corpus_pipeline.py::test_pair_backend_lsh_equals_exact",
-    "test_corpus_pipeline.py::test_write_training_shards_range_reads",
-    "test_corpus_pipeline.py::test_span_dedup_stage",
-    "test_corpus_pipeline.py::test_ppl_cap_filters_tail",
     # dedup/similarity brute-force and boundary sweeps
     "test_dedup_similarity.py::test_filtered_ann_prefilter_semantics",
     "test_dedup_similarity.py::test_ivf_recall_and_score_exactness",
@@ -52,17 +34,11 @@ SLOW_CALLS = {
     "test_dedup_similarity.py::test_ngram_jaccard_topk_matches_bruteforce",
     "test_dedup_similarity.py::test_jaccard_df_cap_safety_check",
     "test_dedup_similarity.py::test_maximal_runs_property_random_corpora",
-    # double-run determinism: only the heavy queries (the other 106
-    # registered queries keep their determinism pin in the default set)
+    # double-run determinism: only the heavy corpus queries
     "test_determinism.py::test_query_is_deterministic[c38_release_cycle]",
     "test_determinism.py::test_query_is_deterministic[c40_data_card]",
-    "test_determinism.py::test_query_is_deterministic[x19_bpe_tokenize]",
     "test_determinism.py::test_query_is_deterministic[x16_quality_classifier]",
-    "test_determinism.py::test_query_is_deterministic[c23_corpus_pipeline]",
-    "test_determinism.py::test_query_is_deterministic[x15_bpe_merges]",
-    "test_determinism.py::test_query_is_deterministic[c61_rescan_timeout_replay]",
     "test_determinism.py::test_query_is_deterministic[x21_semantic_dedup]",
-    "test_determinism.py::test_query_is_deterministic[c58_stateful_dedup_replay]",
     "test_determinism.py::test_query_is_deterministic[c42_bm25_topk]",
     "test_determinism.py::test_query_is_deterministic[c39_exact_substring_runs]",
     # 3-SF schema sweep (runs every query at two extra SFs)
@@ -83,42 +59,21 @@ SLOW_CALLS = {
     "test_index_store.py::test_index_rebuild_is_atomic",
     "test_index_store.py::test_pq_index_warm_query_skips_training",
     "test_index_store.py::test_extend_heals_crash_residue",
-    # model-store warm-path parity
-    "test_model_store.py::test_quality_params_roundtrip_and_warm_scores_exact",
-    "test_model_store.py::test_langid_model_roundtrip_and_warm_scores_exact",
     # packing/property sweeps
     "test_packing.py::test_spfhp_assignments_random_vs_reference",
     "test_packing.py::test_global_offsets_property_random_frames",
-    "test_pii.py::test_property_composed_docs",
     "test_property_text.py::test_duplicated_spans_match_bruteforce",
     "test_property_text.py::test_trigram_fuzzy_property",
     "test_property_text.py::test_quantize_engine_parity_random_vectors",
     "test_property_text.py::test_normalize_property",
     "test_quality.py::test_property_token_streams",
     "test_release.py::test_release_cycle_converges_index_and_replays",
-    # streaming replay pins
-    "test_streaming.py::test_token_bucket_reset_at_utc_hour",
-    "test_streaming.py::test_nightly_ops_recipe_two_days_with_missed_slot",
-    "test_streaming.py::test_token_bucket_multibatch_matches_greedy_replay_oracle",
-    "test_streaming.py::test_partitioned_merge_sink_long_high_byte_keys",
-    "test_streaming.py::test_token_bucket_single_batch_matches_batch_twin",
-    "test_temporal.py::test_interval_join_property_random_timelines",
     "test_text_selection.py::test_bm25_capped_leg_recall_and_error_bound",
     "test_text_selection.py::test_incremental_data_card_converges_and_noop",
     "test_text_selection.py::test_bm25_df_cap_prunes_hot_terms_exactly",
     "test_text_selection.py::test_stratified_sample_property_random_shapes",
-    # ------------------------------------------------------------------
-    # second trim (same round): the first default run measured 1,717 s
-    # under the active episode — inside the ~1,800 s target but with
-    # ~5% margin. The 7.5–10 s band below (34 calls, ~297 s in the
-    # instrumented run) buys the headroom; oracle-gate params
-    # (test_query_matches_oracle[*]) are deliberately NOT trimmed.
-    # ------------------------------------------------------------------
-    "test_determinism.py::test_query_is_deterministic[c62_cadence_replay]",
-    "test_determinism.py::test_query_is_deterministic[c05_streaming_interval_join]",
-    "test_determinism.py::test_query_is_deterministic[c57_near_dup_screen]",
+    # the 7.5-10 s band (oracle-gate params are never in the set)
     "test_determinism.py::test_query_is_deterministic[c44_incremental_data_card]",
-    "test_determinism.py::test_query_is_deterministic[zt02_trained_langid]",
     "test_dedup_similarity.py::test_ivf_recall_at_production_setting",
     "test_dedup_similarity.py::test_minhash_verify_legs_agree",
     "test_dedup_similarity.py::test_semantic_dedup_invariants",
@@ -144,7 +99,6 @@ SLOW_CALLS = {
     "test_index_store.py::test_extend_ivf_index_adds_without_rewrite",
     "test_index_store.py::test_extend_ivf_index_rejects_wrong_kind",
     "test_index_store.py::test_compact_drops_crc_sidecars",
-    "test_streaming.py::test_partitioned_merge_sink_null_keys",
     "test_text_selection.py::test_data_card_null_and_literal_all_source_parity",
     "test_release.py::test_diff_and_release_oracles_null_content_parity",
     "test_packing.py::test_chunk_documents_is_streaming_compatible",

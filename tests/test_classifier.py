@@ -187,15 +187,47 @@ def test_percentiles_nearest_rank(scored):
     assert p["p95"] == pytest.approx(scores[int(len(scores) * 0.95)], abs=1e-9)
 
 
-def test_percentiles_multi_partition_with_duplicates(spark):
-    # 1000 scores with heavy duplication, spread over 16 partitions —
-    # exercises the distinct-value cumulative-count path end to end
-    vals = [float(i % 37) for i in range(1000)]
+def _check_percentiles_duplicates(spark, n):
+    # n scores with heavy duplication, spread over 16 partitions
+    vals = [float(i % 37) for i in range(n)]
     df = spark.createDataFrame([(v,) for v in vals], "gatto_score double").repartition(16)
     p = score_percentiles(df).first()
     s = sorted(vals)
     assert p["p50"] == pytest.approx(s[int(len(s) * 0.5)], abs=1e-9)
     assert p["p95"] == pytest.approx(s[int(len(s) * 0.95)], abs=1e-9)
+
+
+def test_percentiles_multi_partition_with_duplicates(spark):
+    _check_percentiles_duplicates(spark, 1000)
+
+
+@pytest.mark.parametrize("n", [1, 2, 19, 20, 21, 199, 200, 201])
+def test_percentiles_index_boundaries(spark, n):
+    # the sizes straddle the floor(n·p) index boundaries of p50 and p95
+    _check_percentiles_duplicates(spark, n)
+
+
+def test_percentiles_empty_input(spark):
+    df = spark.createDataFrame([], "gatto_score double")
+    p = score_percentiles(df).first()
+    assert (p["p50"], p["p95"]) == (None, None)
+
+
+def test_percentiles_null_score_counted_and_ordered_last(spark):
+    # a null score counts toward n and sorts after every value: with
+    # n = 2, p50 indexes position 1, which is the null
+    df = spark.createDataFrame([(3.0,), (None,)], "gatto_score double")
+    p = score_percentiles(df).first()
+    assert (p["p50"], p["p95"]) == (None, None)
+    df = spark.createDataFrame([(3.0,), (1.0,), (None,)], "gatto_score double")
+    p = score_percentiles(df).first()
+    assert (p["p50"], p["p95"]) == (3.0, None)
+
+
+def test_percentiles_plan_has_no_window(spark):
+    df = spark.createDataFrame([(float(i),) for i in range(20)], "gatto_score double")
+    plan = score_percentiles(df)._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
 
 
 def test_status_transitions(scored, spark):

@@ -118,14 +118,15 @@ def test_cap_window_holds_only_oracle_queries():
     # and the window boundary is where COVERAGE.md documents it
     # (r11: c51-c54 displaced q01/p08/p07/p04; r12: c55-c57 displaced
     # p02/p05/m03; r13: c58-c62 displaced m01/e09/e08/e06/e03 — all
-    # z-pushed, RENAMES_R11/RENAMES_R12/RENAMES_R13)
-    assert in_cap[0].startswith("c05") and in_cap[-1].startswith("e02"), in_cap[-1]
+    # z-pushed, RENAMES_R11/RENAMES_R12/RENAMES_R13). Deleting c23, c51
+    # and c57 with their features moved s08, t01 and t02 into the window.
+    assert in_cap[0].startswith("c05") and in_cap[-1].startswith("t02"), in_cap[-1]
     for must_sign in (
         "c05_", "c18_", "c24_", "c25_",
         "c26_", "c27_", "c28_", "c29_", "c30_", "c31_", "c32_", "c33_",
         "c34_", "c35_", "c36_", "c37_", "c38_", "c39_", "c40_", "c41_", "c42_",
         "c43_", "c44_", "c45_", "c46_", "c47_", "c48_", "c49_", "c50_",
-        "c51_", "c52_", "c53_", "c54_", "c55_", "c56_", "c57_", "c58_",
+        "c52_", "c53_", "c54_", "c55_", "c56_", "c58_",
         "c59_", "c60_", "c61_", "c62_",
     ):
         assert any(n.startswith(must_sign) for n in in_cap), must_sign
@@ -155,7 +156,7 @@ def test_cap_window_holds_only_oracle_queries():
 
 
 def test_registry_v1_name_freeze():
-    """r8 verdict item 1 — the registry v1 NAME FREEZE. All 89 r8
+    """r8 verdict item 1 — the registry v1 NAME FREEZE. All r8
     names carry a driver signature (CORRECTNESS_r08 window + pinned
     z/legacy lineage), so nothing is left to rotate for: a frozen
     name never changes again, EXCEPT a z-push (old → "z"+old,
@@ -166,7 +167,9 @@ def test_registry_v1_name_freeze():
     import bench
     import __spark_entry__ as e
 
-    assert len(bench.REGISTRY_V1_FROZEN) == 89
+    # 89 at the freeze; six left with the multimodal, BPE and
+    # corpus-pipeline queries (bench.REGISTRY_V1_FROZEN's comment)
+    assert len(bench.REGISTRY_V1_FROZEN) == 83
     names = set(e.queries())
     frozen = set(bench.REGISTRY_V1_FROZEN)
     renames = bench.RENAMES  # cumulative z-push record (r9 + r10 + …)
@@ -242,7 +245,7 @@ def test_bench_compact_line_fits_driver_stdout_window():
             "zp": len(bench.RENAMES) + (len(sim_names) - len(names)),
             "hn": sum(
                 n.startswith(
-                    ("c05_", "c18_", "c57_", "c58_", "c61_", "c62_", "zp02_", "zp08_")
+                    ("c05_", "c18_", "c58_", "c61_", "c62_", "zp02_", "zp08_")
                 )
                 for n in sim_names
             ),

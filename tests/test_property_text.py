@@ -150,107 +150,6 @@ def test_shingle_hash_counts_match_string_shingles_random(spark):
     inner()
 
 
-def test_bpe_merges_match_reference_learner(spark):
-    """x15 parity: the distributed BPE learner reproduces an
-    independent pure-Python reference (Sennrich-style: word-frequency
-    dict, weighted pair counts, lexicographic tie-break, greedy
-    left-to-right merge application) on the smoke corpus — the merge
-    table, pair counts, and final corpus symbol totals all match."""
-    import re
-    from collections import Counter
-
-    from trendr_data_pipeline_spark.operators.bpe import bpe_segment_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = bpe_segment_stats(docs, num_merges=10).collect()
-    got_merges = [(r["step"], r["left"], r["right"], r["pair_count"])
-                  for r in out if r["step"] > 0]
-    summary = [r for r in out if r["step"] == -1][0]
-
-    # reference learner
-    vocab = Counter()
-    for r in docs.select("text").collect():
-        for w in re.split(r"\s+", r["text"].lower()):
-            if w:
-                vocab[w] += 1
-    segs = {w: list(w) for w in vocab}
-    ref_merges = []
-    for step in range(1, 11):
-        pc = Counter()
-        for w, syms in segs.items():
-            c = vocab[w]
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += c
-        if not pc:
-            break
-        (left, right), wcnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        ref_merges.append((step, left, right, wcnt))
-        for w, syms in segs.items():
-            out_s, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                    out_s.append(left + right)
-                    i += 2
-                else:
-                    out_s.append(syms[i])
-                    i += 1
-            segs[w] = out_s
-    assert got_merges == ref_merges
-    assert summary["corpus_chars"] == sum(c * len(w) for w, c in vocab.items())
-    assert summary["corpus_syms"] == sum(c * len(segs[w]) for w, c in vocab.items())
-    # merges must actually compress the corpus
-    assert summary["corpus_syms"] < summary["corpus_chars"]
-
-
-def test_bpe_tokenize_consistent_with_learner(spark):
-    """x19 parity: (a) corpus-wide piece totals from the rank-based
-    encode loop equal the learner's final segmentation totals (the
-    standard BPE equivalence: encoding with merge ranks reproduces
-    the training-time segmentation); (b) per-source stats match a
-    pure-Python reference encode."""
-    import re
-    from collections import Counter
-
-    from trendr_data_pipeline_spark.operators.bpe import (
-        bpe_segment_stats,
-        bpe_tokenize_stats,
-        learn_bpe_merges,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    stats = bpe_tokenize_stats(docs, num_merges=10).collect()
-    summary = [r for r in bpe_segment_stats(docs, num_merges=10).collect() if r["step"] == -1][0]
-    assert sum(r["n_pieces"] for r in stats) == summary["corpus_syms"]
-    assert sum(r["n_chars"] for r in stats) == summary["corpus_chars"]
-
-    merges, _ = learn_bpe_merges(docs, num_merges=10)
-    ranks = {(left, right): i for i, (_, left, right, _) in enumerate(merges)}
-
-    def encode_len(word):
-        syms = list(word)
-        while len(syms) >= 2:
-            cands = [(ranks[(a, b)], i) for i, (a, b) in enumerate(zip(syms, syms[1:]))
-                     if (a, b) in ranks]
-            if not cands:
-                break
-            _, i = min(cands)
-            syms[i : i + 2] = [syms[i] + syms[i + 1]]
-        return len(syms)
-
-    ref = {}
-    for r in docs.select("source", "text").collect():
-        agg = ref.setdefault(r["source"], Counter())
-        for w in re.split(r"\s+", r["text"].lower()):
-            if w:
-                agg["n_words"] += 1
-                agg["n_chars"] += len(w)
-                agg["n_pieces"] += encode_len(w)
-    for r in stats:
-        a = ref[r["source"]]
-        assert (r["n_words"], r["n_chars"], r["n_pieces"]) == (
-            a["n_words"], a["n_chars"], a["n_pieces"]), r["source"]
-
-
 @given(
     st.lists(
         st.lists(

@@ -844,101 +844,6 @@ def test_partitioned_merge_sink_checkpoint_restart(spark, split_events_dir, tmp_
 
 
 # ---------------------------------------------------------------------------
-# r5: SS13 streaming near-dup ingestion screen (d06/c21 composed with
-# the bucketed merge layout)
-# ---------------------------------------------------------------------------
-
-
-def test_near_dup_screen_stream(spark, tmp_path):
-    """Waves of incoming embeddings are screened against the base
-    corpus plus previously accepted rows plus lower-id batch peers;
-    survivors land in the bucketed target. Oracle: the same decision
-    rule replayed in numpy over exact cosines (threshold 0.99 with
-    planted near-identical vectors — LSH miss odds ~2e-7)."""
-    import numpy as np
-
-    from trendr_data_pipeline_spark.streaming.jobs import near_dup_screen_stream
-
-    def vec(i):
-        r = np.random.RandomState(1000 + i)
-        x = r.randn(64)
-        return x / np.linalg.norm(x)
-
-    def near(v):
-        w = v + 1e-4 * np.random.RandomState(7).randn(64)
-        return w / np.linalg.norm(w)
-
-    base_vecs = {i: vec(i) for i in range(10)}  # ids 0..9
-    # wave 1: 100 fresh, 101 near-dup of base 3, 102 fresh,
-    #         103 near-dup of 102 (within-batch, higher id drops)
-    w1 = {100: vec(100), 101: near(base_vecs[3]), 102: vec(102), 103: near(vec(102))}
-    # wave 2: 200 near-dup of ACCEPTED 100, 201 fresh,
-    #         202 near-dup of base 5
-    w2 = {200: near(w1[100]), 201: vec(201), 202: near(base_vecs[5])}
-
-    def frame(d):
-        return spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in sorted(d.items())],
-            "vec_id long, embedding array<double>",
-        )
-
-    corpus = frame(base_vecs)
-    waves = str(tmp_path / "waves")
-    os.makedirs(waves)
-    target = str(tmp_path / "accepted")
-    ckpt = str(tmp_path / "ck")
-
-    def write_wave(i, d):
-        import glob as g
-        import shutil as sh
-
-        frame(d).coalesce(1).write.parquet(f"{waves}/w{i}")
-        for f in g.glob(f"{waves}/w{i}/*.parquet"):
-            sh.move(f, f"{waves}/wave{i}.parquet")
-        sh.rmtree(f"{waves}/w{i}")
-
-    stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(
-        waves
-    )
-    write_wave(1, w1)
-    q = near_dup_screen_stream(
-        stream, corpus, target, ckpt, threshold=0.99, buckets=4
-    )
-    try:
-        q.processAllAvailable()
-        got1 = {
-            r["vec_id"]
-            for r in spark.read.parquet(target + "/bucket=*").collect()
-        }
-        write_wave(2, w2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # oracle replay with exact cosines
-    def cos(a, b):
-        return float(np.dot(a, b))
-
-    accepted = dict(base_vecs)
-    expect = set()
-    for wave in (w1, w2):
-        survivors = {}
-        for i in sorted(wave):
-            v = wave[i]
-            dup = any(cos(v, u) >= 0.99 for u in accepted.values()) or any(
-                cos(v, wave[j]) >= 0.99 for j in wave if j < i
-            )
-            if not dup:
-                survivors[i] = v
-        accepted.update(survivors)
-        expect |= set(survivors)
-
-    assert got1 == {i for i in expect if i < 200} or got1 <= expect
-    got = {r["vec_id"] for r in spark.read.parquet(target + "/bucket=*").collect()}
-    assert got == expect, (sorted(got), sorted(expect))
-
-
-# ---------------------------------------------------------------------------
 # r7: null keys, tie rule, and footer-stat truncation safety
 # ---------------------------------------------------------------------------
 
@@ -1629,63 +1534,3 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
         for r in spark.read.parquet(quota_out).collect()
     }
     assert got_q == want_q
-
-
-def test_near_dup_screen_redelivered_id(spark, tmp_path):
-    """r13-opt O7 pin: the single tagged-reference join preserves the
-    two-join semantics on the redelivery edge — an id present in BOTH
-    the batch and the accepted target never matches its own accepted
-    copy (q_id != c_id applies across reference classes), while a
-    lower-id batch peer near-dup still screens both it and itself
-    against the accepted copy. wave2 redelivers accepted id 100
-    alongside id 50 = near(100): 50 drops (matches ACCEPTED 100
-    unconditionally, despite 50 < 100), the redelivered 100 drops
-    (lower-id batch peer 50 is a near-dup), and the target keeps
-    exactly the wave-1 row."""
-    import glob as g
-    import shutil as sh
-
-    import numpy as np
-
-    from trendr_data_pipeline_spark.streaming.jobs import near_dup_screen_stream
-
-    r = np.random.RandomState(99)
-    v100 = r.randn(64)
-    v100 = v100 / np.linalg.norm(v100)
-    v50 = v100 + 1e-4 * np.random.RandomState(7).randn(64)
-    v50 = v50 / np.linalg.norm(v50)
-    base = r.randn(64)
-    base = base / np.linalg.norm(base)
-
-    def frame(d):
-        return spark.createDataFrame(
-            [(int(i), [float(x) for x in vec]) for i, vec in sorted(d.items())],
-            "vec_id long, embedding array<double>",
-        )
-
-    corpus = frame({1: base})
-    waves = str(tmp_path / "waves")
-    os.makedirs(waves)
-    target = str(tmp_path / "accepted")
-    ckpt = str(tmp_path / "ck")
-
-    def write_wave(i, d):
-        frame(d).coalesce(1).write.parquet(f"{waves}/w{i}")
-        for f in g.glob(f"{waves}/w{i}/*.parquet"):
-            sh.move(f, f"{waves}/wave{i}.parquet")
-        sh.rmtree(f"{waves}/w{i}")
-
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(waves)
-    write_wave(1, {100: v100})
-    q = near_dup_screen_stream(stream, corpus, target, ckpt, threshold=0.99, buckets=4)
-    try:
-        q.processAllAvailable()
-        write_wave(2, {100: v100, 50: v50})
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {r["vec_id"] for r in spark.read.parquet(target + "/bucket=*").collect()}
-    assert got == {100}, sorted(got)

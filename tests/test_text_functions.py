@@ -218,55 +218,3 @@ def test_is_valid_published_date(spark):
     ).collect()
     for r in rows:
         assert r["got"] == r["want"], r
-
-
-# ---------------------------------------------------------------------------
-# ⊕T2 trained leg (r12) — char-bigram LR langid on the planted corpus
-# ---------------------------------------------------------------------------
-
-
-def test_trained_langid_heldout_accuracy_and_heuristic_agreement(spark):
-    """The zt02 pins (r11 verdict item 6): on the planted corpus
-    (3 true + 1 decoy marker per doc — operators/langid_model.py),
-    the trained char-bigram LR must reach ≥ 0.9 held-out accuracy vs
-    the planted truth AND ≥ 0.9 held-out agreement with the t02
-    marker heuristic. The device's own sanity is asserted first: the
-    heuristic recovers the planted language everywhere (3 > 1), so
-    agreement is not a tautology of a degenerate teacher — and the
-    decoy marker means a presence-only learner FAILS the accuracy
-    bound (every doc contains two languages' markers)."""
-    from trendr_data_pipeline_spark.io import read_table
-    from trendr_data_pipeline_spark.operators.langid_model import (
-        train_and_score_langid,
-    )
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id")
-    rows = train_and_score_langid(docs).collect()
-    assert rows
-
-    # device sanity: heuristic == planted truth on every doc
-    wrong_heur = [r for r in rows if r["lang_heur"] != r["lang_true"]]
-    assert not wrong_heur, wrong_heur[:3]
-    # all five classes present in the held-out slice
-    held = [r for r in rows if not r["is_train"]]
-    assert len({r["lang_true"] for r in held}) == 5
-
-    acc = sum(r["lang_pred"] == r["lang_true"] for r in held) / len(held)
-    agree = sum(r["lang_pred"] == r["lang_heur"] for r in held) / len(held)
-    assert acc >= 0.9, acc
-    assert agree >= 0.9, agree
-
-
-def test_trained_langid_split_is_deterministic(spark):
-    """The md5 hash split (no RNG) makes the train/held-out partition
-    reproducible across sessions — rerunning the pipeline retrains on
-    the same rows (the x16/mixture-sampler posture)."""
-    from trendr_data_pipeline_spark.operators.langid_model import (
-        train_and_score_langid,
-    )
-    from trendr_data_pipeline_spark.io import read_table
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id")
-    a = {r["doc_id"]: r["is_train"] for r in train_and_score_langid(docs).collect()}
-    b = {r["doc_id"]: r["is_train"] for r in train_and_score_langid(docs).collect()}
-    assert a == b

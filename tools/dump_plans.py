@@ -8,7 +8,7 @@ uses, so the committed plan files show the SAME subtrees the audit
 sees, not just the post-checkpoint LogicalRDD scan).
 
 Usage: python tools/dump_plans.py <tag> <suffix> [sf_dir] [query ...]
-e.g.   python tools/dump_plans.py r13 before /root/testdata/sf0.1 c23_corpus_pipeline
+e.g.   python tools/dump_plans.py r15 before "$SF_DIR" c56_grid_scan_cycle
 """
 
 from __future__ import annotations

@@ -35,7 +35,6 @@ sys.path.insert(0, str(REPO))
 # a written cardinality bound (SCALING.md): the single-partition frame
 # holds |buckets| / |top-k| / |histogram| rows, never |corpus|.
 GLOBAL_WINDOW_ALLOWLIST = {
-    "c23_corpus_pipeline": "bucket-total base rows (packing.py:75), |quality buckets|",
     "x04_sequence_packing": "bucket-total base rows (packing.py:75)",
     "x06_budget_selection": "bucket-total base rows (packing.py:75)",
     "x22_zipf_stats": "top-50 tokens only (TakeOrderedAndProject feeds it)",

@@ -25,7 +25,6 @@ sys.path.insert(0, str(REPO))
 PROBE_QUERIES = [
     "c05_streaming_interval_join",
     "c18_streaming_momentum",
-    "c57_near_dup_screen",
     "c58_stateful_dedup_replay",
     "c61_rescan_timeout_replay",
     "c62_cadence_replay",

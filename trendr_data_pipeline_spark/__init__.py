@@ -2,9 +2,8 @@
 
 A from-scratch, idiomatic-Spark re-expression of the query and
 data-processing capabilities of the trendr.data-pipeline reference
-(POI trend-discovery ETL), plus the LLM-training-data-pipeline
-operators (dedup, similarity search, multimodal plumbing, text
-analysis) required at 100 TB scale.
+(POI trend-discovery ETL), plus corpus/LLM-training-data operators
+(dedup, similarity search, text analysis) that no POI path calls.
 
 Package map
 -----------
@@ -12,7 +11,7 @@ Package map
 - ``schemas``    : StructType registry for every table (SURVEY §1.4).
 - ``io``         : parquet readers/writers for the fixture tables.
 - ``functions/`` : column-expression library (text ST*, dates DT*,
-                   math/geo M*, arrays/maps AM* from SURVEY §2.7).
+                   math/geo M* from SURVEY §2.7).
 - ``operators/`` : composed dataflow operators (joins, dedup,
                    similarity, classifier aggregates, spatial).
 - ``plans/``     : end-to-end query definitions used by the driver

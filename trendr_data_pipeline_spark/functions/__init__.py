@@ -5,7 +5,6 @@ Modules mirror the survey's function groups:
 - ``text``    : ST1–ST12 string/URL/normalization functions
 - ``dates``   : DT1–DT9 date parsing/decay/TTL functions
 - ``math_geo``: M1–M9 clamps, blends, haversine, geo signals
-- ``arrays``  : AM1–AM5 map/array/JSON helpers
 
 Everything returns ``pyspark.sql.Column`` built from JVM-side
 builtins unless exact reference parity demands Python (accent

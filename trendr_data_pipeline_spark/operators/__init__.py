@@ -1,11 +1,25 @@
 """Composed dataflow operators.
 
-- ``dedup``      : exact, prefix-filtered Jaccard, MinHash-LSH, SimHash
-- ``similarity`` : embedding cosine top-k (brute-force + LSH-bucketed)
-- ``textquality``: language-ID, quality scoring, fingerprinting
-- ``relational`` : as-of join and window-suite helpers
-- ``spatial``    : haversine/bbox joins, point-in-polygon refine
-- ``classifier`` : reference A1–A8 score aggregates
-- ``mentions``   : reference mention pipeline (W1 dedup, F6 decision)
-- ``multimodal`` : binary-column plumbing (decode stubs, batch shape)
+POI pipeline:
+
+- ``grid``        : hex/square grid work queue (H1-H4)
+- ``ingestion``   : place-ingestion filters, projections and novelty
+- ``candidates``  : candidate query generation and preparation
+- ``mentions``    : reference mention pipeline (W1 dedup, F6 decision)
+- ``classifier``  : reference A1-A8 score aggregates and percentiles
+- ``collections`` : collection tag engine
+- ``spatial``     : haversine/bbox joins, point-in-polygon refine
+- ``temporal``    : interval joins
+- ``skew``        : skew mitigation and co-located joins
+
+Corpus/LLM-data operators (no POI caller):
+
+- ``dedup``       : exact, prefix-filtered Jaccard, MinHash-LSH, SimHash
+- ``graph``       : connected components over near-dup pairs
+- ``similarity``  : embedding cosine top-k (brute-force, LSH, IVF, PQ)
+- ``index_store`` : persisted ANN indexes
+- ``text_index``  : persisted MinHash-LSH text index
+- ``quality``, ``quality_model`` : document quality metrics and model
+- ``sampling``, ``packing``, ``vectorize``, ``release`` : mixture
+  sampling, sequence packing, feature hashing, release cycle
 """

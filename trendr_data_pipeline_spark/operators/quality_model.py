@@ -17,7 +17,7 @@ The weak label is derived from the t03 quality blend (above/below
 the corpus median): the test of this operator is the PLUMBING —
 features → assembler → scaler → LBFGS → scores — with an AUC floor
 on held-out rows pinned in pytest, not SQL-oracle equality (iterative
-optimization has no static SQL twin; same rows-only posture as x15).
+optimization has no static SQL twin; same rows-only posture as x01).
 """
 
 from __future__ import annotations
@@ -137,8 +137,7 @@ def fit_quality_params(labeled: DataFrame) -> dict:
     std}`` — the serve-without-the-model form scoring uses (see the
     codegen note in :func:`score_quality`). The dict is the persisted
     artifact: four float vectors, exact under JSON round-trip
-    (repr-based float encoding), so a warm load scores byte-identically
-    (pinned by tests/test_model_store.py)."""
+    (repr-based float encoding)."""
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import StandardScaler, VectorAssembler
 
@@ -212,7 +211,6 @@ def train_and_score_quality(
     optimum of the convex objective, but the last ulps depend on
     aggregation order; 4dp is stable in practice and the pytest gate
     asserts ranking quality, not bit-equality). Composes the split
-    stages; :mod:`model_store` persists the fit stage's params for
-    the warm path."""
+    stages."""
     labeled = labeled_quality_frame(docs, train_frac=train_frac, salt=salt)
     return score_quality(labeled, fit_quality_params(labeled))

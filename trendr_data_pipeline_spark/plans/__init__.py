@@ -21,12 +21,9 @@ def load_all() -> None:
     from . import events_ops  # noqa: F401
     from . import scalar_ops  # noqa: F401
     from . import pipeline_ops  # noqa: F401
-    from . import multimodal_ops  # noqa: F401
-    from . import corpus_pipeline  # noqa: F401
     from . import release_ops  # noqa: F401
     from . import data_card  # noqa: F401
     from . import decontam_ops  # noqa: F401
-    from . import pii_ops  # noqa: F401
     from . import layout_ops  # noqa: F401
     from . import spatial_ops  # noqa: F401
     from . import grid_ops  # noqa: F401

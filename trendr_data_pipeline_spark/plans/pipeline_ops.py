@@ -8,10 +8,10 @@ ANSI-SQL-expressible; pytest pins its per-component semantics). The
 streaming surface graduated in stages: windowed/aggregating jobs
 replay against SQL twins (c05/c18), and since r12/r13 the STATEFUL
 jobs are oracle-gated too, via planted waves whose deterministic
-arithmetic makes the state machine SQL-replayable — c57 (foreachBatch
-near-dup screen), c58 (≤N-per-key dedup counters), c61 (event-time
-rescan timeouts), c62 (cadence last-emitted state); see each gate's
-docstring for what its device makes load-bearing.
+arithmetic makes the state machine SQL-replayable — c58 (≤N-per-key
+dedup counters), c61 (event-time rescan timeouts), c62 (cadence
+last-emitted state); see each gate's docstring for what its device
+makes load-bearing.
 """
 
 from __future__ import annotations
@@ -504,192 +504,8 @@ def c52_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# c57 — streaming near-dup ingestion screen (⊕SS13) under the oracle
-# (r11 verdict item 7; the last streaming operator without a driver
-# hash gate). Two deterministic waves of incoming embeddings replay
-# through the REAL near_dup_screen_stream (file-stream source →
-# foreachBatch LSH screen → bucketed parquet target); the hashed
-# output is the final target content. The oracle replays the
-# documented decision rule — drop a row iff it has a cosine ≥ t match
-# in (base corpus ∪ previously accepted ∪ lower-id batch peers) —
-# with brute-force exact cosines, so the gate certifies BOTH the
-# decision rule and the sketch screen's recall on these shapes
-# (the d06 geometry: perturbed copies at cosine ≈ 0.9996, sign-flip
-# symmetric, far from the 0.99 threshold on both sides).
-# ---------------------------------------------------------------------------
-
-#: d06's perturbation (1-based index form for DuckDB list_transform)
-_C57_PERTURB = "x * (1 + ((((i - 1) % 7) - 3) / 100.0))"
-_C57_T = 0.99
-
-
-def _c57_cos(a: str, b: str) -> str:
-    return (
-        f"(list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-    )
-
-
-def _c57_no_match(alias: str, other: str, extra: str = "") -> str:
-    return (
-        f"NOT EXISTS (SELECT 1 FROM {other} _o WHERE "
-        + _c57_cos(f"{alias}.v", "_o.v")
-        + f" >= {_C57_T}{extra})"
-    )
-
-
-_SQL_NEAR_DUP_SCREEN = f"""
-    WITH c AS (
-        SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    w1 AS (
-        SELECT id + 10000000 AS id,
-               list_transform(v, (x, i) -> {_C57_PERTURB}) AS v
-        FROM c WHERE id % 4 = 0
-        UNION ALL
-        SELECT id + 20000000, list_transform(v, x -> -x)
-        FROM c WHERE id % 4 = 1
-    ),
-    w1s AS (
-        SELECT a.id, a.v FROM w1 a
-        WHERE {_c57_no_match("a", "c")}
-          AND {_c57_no_match("a", "w1", " AND _o.id < a.id")}
-    ),
-    w2 AS (
-        SELECT id + 30000000 AS id,
-               list_transform(list_transform(v, x -> -x), (x, i) -> {_C57_PERTURB}) AS v
-        FROM c WHERE id % 4 = 1
-        UNION ALL
-        SELECT id + 40000000, list_transform(v, x -> -x)
-        FROM c WHERE id % 4 = 2
-        UNION ALL
-        SELECT id + 50000000,
-               list_transform(list_transform(v, x -> -x), (x, i) -> {_C57_PERTURB})
-        FROM c WHERE id % 4 = 2
-        UNION ALL
-        SELECT id + 60000000, list_transform(v, x -> -x)
-        FROM c WHERE id % 4 = 3
-    ),
-    w2s AS (
-        SELECT a.id FROM w2 a
-        WHERE {_c57_no_match("a", "c")}
-          AND {_c57_no_match("a", "w1s")}
-          AND {_c57_no_match("a", "w2", " AND _o.id < a.id")}
-    )
-    SELECT id AS vec_id FROM w1s
-    UNION ALL
-    SELECT id FROM w2s
-"""
-
-
-def _c57_waves(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The two deterministic incoming waves (Spark twin of the w1/w2
-    CTEs; Spark ``transform`` indexes are 0-based where DuckDB's are
-    1-based — both evaluate the same per-component factor):
-
-    wave 1: perturbed corpus copies (%4=0 → dup of BASE, dropped) and
-    negated copies (%4=1 → novel, accepted — cosine −1 to the parent,
-    isotropic to everything else).
-
-    wave 2: perturbed copies of wave-1 survivors (%4=1 → dup of
-    ACCEPTED, dropped — the union leg), a negated/perturbed-negated
-    pair per %4=2 id (novel vs every reference row but near-dups of
-    EACH OTHER — the lower id survives, the self-screen leg), and
-    plain negated %4=3 (novel, accepted)."""
-    v = F.col("embedding").cast("array<double>")
-    d = F.col("vec_id")
-    perturb = lambda col: F.transform(  # noqa: E731
-        col, lambda x, i: x * (1 + ((i % 7) - 3) / F.lit(100.0))
-    )
-    neg = F.transform(v, lambda x: -x)
-
-    def part(mod: int, offset: int, vec) -> DataFrame:
-        return emb.filter(d % 4 == mod).select(
-            (d + offset).alias("vec_id"), vec.alias("embedding")
-        )
-
-    w1 = part(0, 10_000_000, perturb(v)).unionByName(part(1, 20_000_000, neg))
-    w2 = (
-        part(1, 30_000_000, perturb(neg))
-        .unionByName(part(2, 40_000_000, neg))
-        .unionByName(part(2, 50_000_000, perturb(neg)))
-        .unionByName(part(3, 60_000_000, neg))
-    )
-    return w1, w2
-
-
-@register(
-    "c57_near_dup_screen",
-    _SQL_NEAR_DUP_SCREEN,
-    doc="""⊕SS13 streaming near-dup ingestion screen, driver-gated
-    (r11 verdict item 7): two planted waves replayed through the real
-    near_dup_screen_stream (file-stream source, foreachBatch d06-LSH
-    screen with the batch BROADCAST against corpus ∪ accepted, lower-
-    id self-pair rule, bucketed crash-safe target); hash = the final
-    target's id set. The oracle brute-forces the decision rule with
-    exact cosines, so an LSH recall miss, a wrong union leg, or a
-    wrong self-pair orientation each break the hash. All planted
-    cosines sit at ≈0.9996 or ≤~0.5 — no threshold-boundary
-    ambiguity between numpy and DuckDB float summation. Replay
-    harness query (staging + synchronous micro-batches dominate the
-    wall time — tagged in bench harness_queries).""",
-)
-def c57_near_dup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.jobs import near_dup_screen_stream
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    w1, w2 = _c57_waves(emb)
-
-    root = tempfile.mkdtemp(prefix="c57_screen_")
-    waves_dir = os.path.join(root, "waves")
-    target = os.path.join(root, "accepted")
-    ckpt = os.path.join(root, "ck")
-    os.makedirs(waves_dir)
-    # the returned frame lazily reads the staged target (driver/bench
-    # collect AFTER this returns), so the root can't be dropped here —
-    # but three bench reps × two SFs used to accumulate ~6 replay
-    # roots per process (r12 verdict finding): reclaim them at exit
-    import atexit
-    import functools
-
-    atexit.register(functools.partial(shutil.rmtree, root, ignore_errors=True))
-
-    def write_wave(i: int, df: DataFrame) -> None:
-        tmp = os.path.join(root, f"_w{i}")
-        df.coalesce(1).write.parquet(tmp)
-        for f in glob.glob(os.path.join(tmp, "*.parquet")):
-            shutil.move(f, os.path.join(waves_dir, f"wave{i}.parquet"))
-        shutil.rmtree(tmp)
-
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(waves_dir)
-    write_wave(1, w1)
-    q = near_dup_screen_stream(
-        stream, corpus, target, ckpt, threshold=_C57_T, buckets=8
-    )
-    try:
-        q.processAllAvailable()
-        write_wave(2, w2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the returned frame is lazy — the staged target must outlive this
-    # call (driver/bench collect AFTER it returns), so the temp root is
-    # left for process exit; each call re-replays into a fresh root
-    # (bench reps time the full screen, not a cached read)
-    return spark.read.parquet(target + "/bucket=*").select("vec_id")
-
-
-# ---------------------------------------------------------------------------
-# c58 — SS3 stateful ≤N-per-key windowed dedup, driver-gated via the
-# c57 file-replay device (r12 verdict item 1)
+# c58 — SS3 stateful ≤N-per-key windowed dedup, oracle-gated via a
+# file-replay device
 # ---------------------------------------------------------------------------
 
 #: admission cap per (user_id, event_type) across the whole replay —
@@ -724,7 +540,7 @@ _c58_counter = 0
     (r12 verdict item 1 — the reference's core 21-day mention dedup,
     scripts/mention_scanner/dedup.py:47-96, whose
     ``applyInPandasWithState`` implementation verified by pytest only
-    through r12). The c57 replay device: two deterministic waves
+    through r12). The replay device: two deterministic waves
     planted from event-id arithmetic (ts = T0 + (event_id%40) h; wave
     1 = hours 0–19, wave 2 = hours 20–39) are replayed through the
     REAL ``topn_dedup_stateful`` streaming query in two separate
@@ -829,7 +645,7 @@ def _replay_waves(
     name: str,
     shuffle_partitions: str = "8",
 ):
-    """The c57/c58 file-replay harness, shared by every stateful gate:
+    """The file-replay harness, shared by every stateful gate:
     stage each wave as one parquet file, drive the streaming query
     synchronously between writes (one micro-batch per wave + any
     no-data timeout batches), return the memory-sink table.

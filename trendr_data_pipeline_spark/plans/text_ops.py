@@ -218,32 +218,6 @@ def t02_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "zt02_trained_langid",
-    None,  # iterative L-BFGS fit — no SQL twin (x15/x16 posture)
-    doc="""⊕T2's TRAINED leg (r11 verdict item 6; fastText-langid
-    practice): hashed char-bigram features → multinomial pyspark.ml
-    LogisticRegression over a PLANTED language-marked corpus (the
-    c51/c55 synthetic device — the fixture's lang column is
-    uncorrelated with its text, measured r12, so an honest accuracy
-    pin needs planted signal; see operators/langid_model.py). Each
-    doc carries 3 true-language + 1 decoy marker, so the model must
-    weigh counts, not detect presence. Returns the per-split
-    confusion grid vs planted truth AND the t02 heuristic; pytest
-    pins held-out accuracy ≥ 0.9 and heuristic agreement ≥ 0.9.
-    z-named bench-only leg (BENCH_ONLY_LEGS): oracle-less by nature,
-    registered PAST the driver window at creation.""",
-)
-def zt02_trained_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.langid_model import train_and_score_langid
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    scored = train_and_score_langid(docs)
-    return scored.groupBy("is_train", "lang_true", "lang_pred", "lang_heur").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-
-
 # ---------------------------------------------------------------------------
 # t03 — quality scoring, merged r4 with t04's content fingerprints
 # (same doc grain; one gate under the driver's 50-query correctness
@@ -1177,27 +1151,6 @@ def x10_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "x15_bpe_merges",
-    None,
-    doc="""BPE vocabulary induction (⊕: Sennrich et al. 2016, the
-    GPT-2/Llama tokenizer-training practice) — 10 merge rounds learned
-    from the word-frequency dictionary: the corpus collapses to
-    (distinct word, count) ONCE, every round then aggregates the small
-    cached vocab frame (pairs via zip_with over slices, argmax = a
-    one-row driver fetch, merge applied in one Arrow pass,
-    localCheckpoint between rounds). Rows-only under the driver gate —
-    an iterative argmax loop has no static SQL twin (same posture as
-    x01) — with full parity pinned in pytest against an independent
-    pure-Python reference BPE learner on the same corpus.""",
-)
-def x15_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.bpe import bpe_segment_stats
-
-    docs = read_table(spark, sf_dir, "documents")
-    return bpe_segment_stats(docs, num_merges=10)
-
-
-@register(
     "x17_quality_embedding_corr",
     f"""
     WITH t AS (
@@ -1305,7 +1258,7 @@ def x17_quality_embedding_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyspark.ml LogisticRegression (distributed L-BFGS), deterministic
     md5 hash split, every doc scored. Rows-only under the driver gate
     (iterative optimization has no static SQL twin; same posture as
-    x15); held-out AUC ≥ 0.9 and split determinism pinned in
+    x01); held-out AUC ≥ 0.9 and split determinism pinned in
     tests/test_quality.py.""",
 )
 def x16_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1313,28 +1266,6 @@ def x16_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     return train_and_score_quality(docs)
-
-
-@register(
-    "x19_bpe_tokenize",
-    None,
-    doc="""BPE APPLICATION (⊕, the encode half of the x15 learner):
-    tokenize the corpus with the learned 10-merge table and report
-    per-source compression. The encode loop runs over the
-    distinct-word dictionary only, piece counts ride an UNHINTED join
-    back onto the exploded word stream (AQE broadcasts small vocabs
-    and falls back to a shuffle join on billion-row dictionaries —
-    pinned by test_encode_join_broadcasts_small_vocab_under_aqe), and
-    pieces_per_char is an
-    exact integer/integer division (no rounding step). Rows-only
-    under the gate (depends on the iteratively-learned table); full
-    parity vs a pure-Python reference encoder in pytest.""",
-)
-def x19_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.bpe import bpe_tokenize_stats
-
-    docs = read_table(spark, sf_dir, "documents")
-    return bpe_tokenize_stats(docs, num_merges=10)
 
 
 @register(

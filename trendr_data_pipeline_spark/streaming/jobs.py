@@ -636,8 +636,7 @@ def delta_merge_sink(
 
 def _heal_bucket_layout(target_dir: str) -> None:
     """Writer-only recovery for the bucket-partitioned merge layout
-    (shared by :func:`partitioned_merge_sink` and
-    :func:`near_dup_screen_stream` — ONE copy of the crash protocol).
+    of :func:`partitioned_merge_sink`.
 
     Invariant kept by :func:`_swap_bucket_dirs`: for every bucket, a
     COMPLETE copy always exists as ``bucket=N`` or ``._old_bucket=N``.
@@ -740,24 +739,6 @@ def _file_key_ranges(paths: list[str], key: str) -> list[tuple[str, object, obje
     return out
 
 
-def _materialize_batch(label: str, df: DataFrame) -> DataFrame:
-    """Materialize a micro-batch-grain frame ONCE before a sink body
-    that drives several actions over it. ``_pruned_bucket_upsert``
-    runs two actions on its input (the affected-keys ``collect`` and
-    the merged write), so a batch frame with an expensive upstream —
-    c57's LSH screen is two sketch joins over corpus ∪ accepted —
-    would otherwise recompute that upstream per action. The frame is
-    bounded by the micro-batch size (same order as the checkpoint
-    state the stream already carries), so the eager localCheckpoint
-    stores a few thousand narrow rows; storage is ContextCleaner-
-    managed and freed when the batch's frames are dropped. Routed
-    through :func:`~..plan_debug.note_subtree` so the pre-checkpoint
-    subtree stays visible to tools/plan_audit.py."""
-    from ..plan_debug import note_subtree
-
-    return note_subtree(label, df).localCheckpoint(eager=True)
-
-
 def _pruned_bucket_upsert(
     batch_part: DataFrame,
     target_dir: str,
@@ -767,8 +748,8 @@ def _pruned_bucket_upsert(
     epoch_id: int,
     max_records_per_file: int,
 ) -> None:
-    """The shared per-batch body of the bucket-partitioned merge
-    sinks: upsert ``batch_part`` into ``target_dir/bucket=N/`` with
+    """The per-batch body of :func:`partitioned_merge_sink`: upsert
+    ``batch_part`` into ``target_dir/bucket=N/`` with
     TWO levels of pruning —
 
     1. **bucket pruning** (r5): only the batch's affected buckets are
@@ -911,7 +892,7 @@ def partitioned_merge_sink(
 
     Layout: ``target_dir/bucket=N/`` with ``bucket =
     pmod(xxhash64(key), buckets)``, files KEY-SORTED and
-    range-disjoint within each bucket. Each micro-batch (shared body
+    range-disjoint within each bucket. Each micro-batch (body
     :func:`_pruned_bucket_upsert`):
 
     1. computes its AFFECTED bucket set (distinct over the batch —
@@ -1025,133 +1006,4 @@ def cadence_gated_append(
         .applyInPandasWithState(
             fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# SS13 (r5) — streaming near-dup ingestion screen
-# ---------------------------------------------------------------------------
-
-
-def near_dup_screen_stream(
-    stream: DataFrame,
-    corpus: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    buckets: int = 16,
-):
-    """Incremental corpus maintenance: each micro-batch of incoming
-    embeddings is screened for near-duplicates against the BASE
-    corpus plus every previously ACCEPTED row, and only novel rows
-    are upserted into the target (the reference's per-scan mention
-    dedup generalized to embedding space; the streaming twin of the
-    d06/c21 batch screens).
-
-    Composition of gated machinery, per batch:
-
-    1. ONE :func:`~..operators.similarity.embedding_near_dup_join`
-       with the small batch BROADCAST against the big tagged
-       reference side (base corpus ∪ current target ∪ the batch
-       itself, ``_self`` passthrough tag) — the asymmetric d06 shape,
-       so the reference side never shuffles, and the self-pair leg
-       shares the join instead of running a second one;
-    2. rows with any match ≥ ``threshold`` are dropped (anti-join on
-       the pair frame's id_a; ``_self`` pairs count only in the
-       lower-id-survives orientation);
-    3. survivors are materialized ONCE (micro-batch grain) and upsert
-       through the bucket-partitioned merge layout (same per-bucket
-       crash-safe swap as :func:`partitioned_merge_sink` —
-       O(affected buckets) per batch).
-
-    Within-batch duplicates: the self-pairs of the batch are screened
-    via the ``_self`` reference leg, keeping the LOWER id of a
-    colliding pair — deterministic under replay, so checkpoint
-    recovery converges (pinned in tests/test_streaming.py).
-
-    Returns the started StreamingQuery."""
-    import os
-
-    from ..operators.similarity import embedding_near_dup_join
-
-    bucket_of = F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
-
-    def do_screen(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        if not batch.head(1):
-            return
-        os.makedirs(target_dir, exist_ok=True)
-        _heal_bucket_layout(target_dir)
-        have_target = any(
-            e.startswith("bucket=") for e in os.listdir(target_dir)
-        )
-        accepted = (
-            spark.read.schema(batch.schema).parquet(target_dir + "/bucket=*")
-            if have_target
-            else batch.limit(0)
-        )
-        # reference side = base corpus ∪ accepted ∪ the batch itself
-        # (self-screen keeps the lower id of a within-batch pair) —
-        # ONE tagged sketch join instead of one per reference class:
-        # the `_self` passthrough tag lets the batch-peer keep rule
-        # (lower id survives) apply after the shared join, so the
-        # batch is sketched once PER SIDE (broadcast q-side + the
-        # _self leg of the c-side — 3 sketch evaluations → 2) and
-        # there is a single broadcast/join/distinct per micro-batch
-        # instead of two of each.
-        # Orientation semantics are unchanged: q_id != c_id inside
-        # the join still excludes a row from pairing with its own id
-        # in ANY class (a redelivered id never self-matches against
-        # its accepted copy — exactly the two-join behavior), and
-        # within-batch identical-id copies still both survive.
-        reference = (
-            corpus.select(id_col, vec_col)
-            .withColumn("_self", F.lit(False))
-            .unionByName(
-                accepted.select(id_col, vec_col).withColumn(
-                    "_self", F.lit(False)
-                )
-            )
-            .unionByName(
-                batch.select(id_col, vec_col).withColumn("_self", F.lit(True))
-            )
-        )
-        pairs = embedding_near_dup_join(
-            batch,
-            reference,
-            threshold,
-            id_col,
-            vec_col,
-            dim=dim,
-            corpus_extra_cols=("_self",),
-        )
-        dupes = (
-            pairs.filter((~F.col("_self")) | (F.col("id_a") > F.col("id_b")))
-            .select(F.col("id_a").alias(id_col))
-            .distinct()
-        )
-        # one evaluation of the screen per batch: the upsert below
-        # drives TWO actions over its input (keys collect + write),
-        # which would re-run both sketch joins without this
-        survivors = _materialize_batch(
-            "near_dup_screen.survivors", batch.join(dupes, id_col, "left_anti")
-        )
-        # shared file-pruned upsert (within-batch dup copies are
-        # still window-deduped there: an at-least-once source can
-        # deliver the same vec_id twice in one batch, and self-pairs
-        # are excluded by the q != c orientation, so BOTH copies
-        # survive the screen)
-        _pruned_bucket_upsert(
-            survivors, target_dir, id_col, id_col, bucket_of, epoch_id,
-            max_records_per_file=1 << 20,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(do_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
     )
