@@ -36,10 +36,12 @@ def test_build_cse_queries_site_batched(spark):
 
 def test_exclude_domains(spark):
     rows = [("a", "instagram.com"), ("b", "sub.tripadvisor.fr"), ("c", "lefooding.com"),
-            ("d", "notinstagram.com")]
+            ("d", "notinstagram.com"), ("e", None)]
     df = spark.createDataFrame(rows, "id string, domain string")
     kept = {r["id"] for r in C.exclude_domains(df).collect()}
-    assert kept == {"c", "d"}  # subdomain excluded; similar-suffix-but-not-subdomain kept
+    # subdomain excluded; similar-suffix-but-not-subdomain kept; a null
+    # domain matches no exclusion and is kept, not dropped silently
+    assert kept == {"c", "d", "e"}
 
 
 def test_get_or_create_discovered(spark):

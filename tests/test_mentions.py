@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from tests.test_text_functions import oracle_dedupe_key, oracle_trigram
 from trendr_data_pipeline_spark.operators.mentions import (
+    resolve_source,
     score_candidates,
     windowed_dedup,
 )
@@ -227,6 +228,26 @@ def test_expected_decisions(scored):
     assert scored["p5"]["decision"] == "REJECT"      # no signals
     assert scored["p3"]["pen_country"] == 1.0
     assert scored["p2"]["pen_city"] == pytest.approx(0.15)
+
+
+def test_resolve_source_empty_domain_takes_no_suffix_match(spark):
+    """Every string ends with "", so an empty candidate domain must not
+    enter the suffix pass (it would take the longest catalog domain);
+    a real subdomain still suffix-matches its catalog domain."""
+    cat_rows = [
+        {**{f.name: None for f in DOMAIN["source_catalog"].fields}, **c} for c in CATALOG
+    ]
+    cat = spark.createDataFrame(
+        [tuple(r[f.name] for f in DOMAIN["source_catalog"].fields) for r in cat_rows],
+        DOMAIN["source_catalog"],
+    )
+    cands = spark.createDataFrame(
+        [("p1", "https://x.fr/a", ""), ("p2", "https://guide.timeout.fr/b", "guide.timeout.fr"),
+         ("p3", "https://y.fr/c", None)],
+        "poi_id string, url string, domain string",
+    )
+    got = {r["poi_id"]: r["cat_source_id"] for r in resolve_source(cands, cat).collect()}
+    assert got == {"p1": None, "p2": "timeout_fr", "p3": None}
 
 
 def test_windowed_dedup_w1(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timedelta
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,11 +105,28 @@ def test_spatial_stage(result):
     assert any(r["neighbourhood_name"] == "Quartier Centre" for r in rows)
 
 
+def _catalog_source(url):
+    """(source_id, authority_weight) the catalog gives ``url``'s host:
+    an exact or subdomain match, else the pipeline's discovered
+    default."""
+    host = urlparse(url).hostname.removeprefix("www.")
+    for c in CATALOG:
+        cat = urlparse(c["base_url"]).hostname.removeprefix("www.")
+        if host == cat or host.endswith("." + cat):
+            return c["source_id"], c["authority_weight"]
+    return "discovered", 0.4
+
+
 def test_mention_stage(result):
     rows = result.mentions_accepted.collect()
     assert rows
     assert all(r["decision"] == "ACCEPT" for r in rows)
     assert all(r["dedup_rank"] <= 2 for r in rows)
+    # every fixture candidate has a null domain: the cycle must resolve
+    # each one through its url's host, not through an empty domain
+    for r in rows:
+        assert (r["source_id"], r["authority_weight"]) == _catalog_source(r["url"]), r["url"]
+    assert any(r["source_id"] == "lefooding" for r in rows)
 
 
 def test_classification_stage(result):

@@ -78,66 +78,6 @@ def test_bucketed_join_runs_without_exchange(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
 
-def test_score_candidates_salted_profiles_identical(spark):
-    """The pipeline wiring: score_candidates(salt_profiles=N) shards
-    the hot city_slug across N reducers instead of broadcasting the
-    profile dim — output must be identical to the broadcast plan on a
-    90%-hot-key candidate batch (the real-corpus shape where one city
-    dominates)."""
-    from datetime import datetime
-
-    from tests.test_mentions import CATALOG, PROFILES
-    from trendr_data_pipeline_spark.operators.mentions import score_candidates
-    from trendr_data_pipeline_spark.schemas import DOMAIN
-
-    n = 400
-    rows = [
-        (
-            f"poi-{i % 50:04d}",
-            f"Venue {i % 50}",
-            "paris" if i % 10 < 9 else "lyon",  # 90% hot key
-            f"https://site{i % 9}.fr/venue-{i % 50}",
-            f"Venue {i % 50} — best of paris",
-            "a nice spot 75011",
-            None,
-            48.85 + (i % 20) * 0.001,
-            2.35 + (i % 20) * 0.001,
-            None,
-        )
-        for i in range(n)
-    ]
-    cands = spark.createDataFrame(
-        rows,
-        "poi_id string, poi_name string, city_slug string, url string, title string,"
-        " snippet string, domain string, poi_lat double, poi_lng double, published_at timestamp",
-    )
-    profs = spark.createDataFrame(
-        [tuple(p.values()) for p in PROFILES],
-        "city_slug string, city_names_aliases array<string>, country_code string,"
-        " admin_names array<string>, postal_prefixes array<string>, lat_min double,"
-        " lat_max double, lng_min double, lng_max double, centroid_lat double,"
-        " centroid_lng double, competing_cities array<string>",
-    )
-    cat_rows = [
-        {**{f.name: None for f in DOMAIN["source_catalog"].fields}, **c} for c in CATALOG
-    ]
-    cat = spark.createDataFrame(
-        [tuple(r[f.name] for f in DOMAIN["source_catalog"].fields) for r in cat_rows],
-        DOMAIN["source_catalog"],
-    )
-    as_of = F.lit(datetime(2026, 8, 1).isoformat()).cast("timestamp")
-    cols = ["poi_id", "url", "final_score", "decision", "accepted_by"]
-
-    plain = score_candidates(cands, profs, cat, as_of)
-    salted = score_candidates(cands, profs, cat, as_of, salt_profiles=8)
-    assert sorted(map(tuple, plain.select(*cols).collect())) == sorted(
-        map(tuple, salted.select(*cols).collect())
-    )
-    # the salted plan really routes the profile join through the salt
-    assert "_salt" in _plan(salted)
-    assert "_salt" not in _plan(plain)
-
-
 # ---------------------------------------------------------------------------
 # r13 — mechanical per-round pins (r12 verdict item 4): AQE skew-join
 # ACTIVATION on the executed plan, and the salted shard ceiling, both

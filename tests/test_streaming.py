@@ -101,74 +101,6 @@ def test_stateful_topn_dedup(spark, events_dir):
     assert {k: set(v) for k, v in first_two.items()} == dict(got_by_key)
 
 
-def test_merge_sink_upserts(spark, events_dir, tmp_path):
-    """SS4: re-observed keys update in place; the target holds one row
-    per key with the newest version."""
-    from trendr_data_pipeline_spark.streaming.jobs import events_stream, merge_sink
-
-    target = str(tmp_path / "merged")
-    ckpt = str(tmp_path / "ckpt")
-    stream = events_stream(spark, events_dir)
-    # key = (user_id, event_type) encoded as one column for the merge
-    keyed = stream.withColumn(
-        "k", F.concat_ws("|", F.col("user_id"), F.col("event_type"))
-    )
-    q = merge_sink(keyed, target, key="k", version_col="ts", checkpoint_dir=ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    merged = spark.read.parquet(target)
-    total_keys = merged.count()
-    assert total_keys == merged.select("k").distinct().count()  # one row per key
-    # each kept row is the newest ts for its key
-    ev = read_table(spark, SMOKE_SF, "events")
-    want = (
-        ev.withColumn("k", F.concat_ws("|", F.col("user_id"), F.col("event_type")))
-        .groupBy("k")
-        .agg(F.max("ts").alias("ts"))
-    )
-    got = {(r["k"], r["ts"]) for r in merged.select("k", "ts").collect()}
-    assert got == {(r["k"], r["ts"]) for r in want.collect()}
-
-
-def test_merge_sink_swap_crash_recovery(spark, tmp_path):
-    """The two-phase swap leaves a full readable table at EVERY
-    intermediate crash state, and recover_merge_target restores the
-    canonical layout from each of them."""
-    import os
-    import shutil
-
-    from trendr_data_pipeline_spark.streaming.jobs import recover_merge_target
-
-    target = str(tmp_path / "tbl")
-    rows = [(1, "a"), (2, "b")]
-    spark.createDataFrame(rows, "id long, v string").write.parquet(target)
-
-    def check_intact():
-        got = {tuple(r) for r in spark.read.parquet(target).collect()}
-        assert got == set(rows)
-
-    # state 1: crash after backup-out (target → .old), before swap-in —
-    # plus an incomplete temp write
-    os.rename(target, target + ".old")
-    os.makedirs(target + "._epoch7")
-    recover_merge_target(target)
-    assert not os.path.exists(target + ".old")
-    assert not os.path.exists(target + "._epoch7")
-    check_intact()
-
-    # state 2: crash after swap-in, before dropping the stale .old
-    shutil.copytree(target, target + ".old")
-    recover_merge_target(target)
-    assert not os.path.exists(target + ".old")
-    check_intact()
-
-    # state 3: clean layout is a no-op
-    recover_merge_target(target)
-    check_intact()
-
-
 def test_cadence_gated_append(spark, events_dir):
     """SS5: ≥interval gap between emitted events per key."""
     from trendr_data_pipeline_spark.streaming.jobs import cadence_gated_append
@@ -386,102 +318,6 @@ def _run_until_batches(q, min_batches, timeout_s=120):
     q.awaitTermination(60)
 
 
-def test_merge_sink_checkpoint_restart_exactly_once(spark, split_events_dir, tmp_path):
-    """SS4 restart: stop the merge sink after ~2 of 6 micro-batches,
-    restart from the same checkpoint, and the final target equals the
-    uninterrupted batch upsert — no lost and no double-applied rows."""
-    from trendr_data_pipeline_spark.streaming.jobs import events_stream, merge_sink
-
-    target = str(tmp_path / "merged")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = events_stream(spark, split_events_dir, max_files_per_trigger=1)
-        keyed = stream.withColumn(
-            "k", F.concat_ws("|", F.col("user_id"), F.col("event_type"))
-        )
-        return merge_sink(keyed, target, key="k", version_col="ts", checkpoint_dir=ckpt)
-
-    q = start()
-    try:
-        _run_until_batches(q, 2)
-    finally:
-        if q.isActive:
-            q.stop()
-    # partial state: the target must already be readable (crash-safe
-    # swap invariant) but is allowed to be incomplete
-    assert spark.read.parquet(target).count() > 0
-
-    q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    ev = read_table(spark, SMOKE_SF, "events")
-    want = (
-        ev.withColumn("k", F.concat_ws("|", F.col("user_id"), F.col("event_type")))
-        .groupBy("k")
-        .agg(F.max("ts").alias("ts"))
-    )
-    merged = spark.read.parquet(target)
-    assert merged.count() == merged.select("k").distinct().count()
-    got = {(r["k"], r["ts"]) for r in merged.select("k", "ts").collect()}
-    assert got == {(r["k"], r["ts"]) for r in want.collect()}
-
-
-def test_merge_sink_restart_after_simulated_mid_swap_crash(
-    spark, split_events_dir, tmp_path
-):
-    """SS4 restart through a CRASHED swap: after the interrupted run,
-    wreck the target layout into the worst intermediate state (backup
-    out, incomplete temp write) before restarting. The writer's
-    batch-start recovery must repair it and the final result must
-    still be exact."""
-    import os as _os
-
-    from trendr_data_pipeline_spark.streaming.jobs import events_stream, merge_sink
-
-    target = str(tmp_path / "merged")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = events_stream(spark, split_events_dir, max_files_per_trigger=1)
-        keyed = stream.withColumn(
-            "k", F.concat_ws("|", F.col("user_id"), F.col("event_type"))
-        )
-        return merge_sink(keyed, target, key="k", version_col="ts", checkpoint_dir=ckpt)
-
-    q = start()
-    try:
-        _run_until_batches(q, 2)
-    finally:
-        if q.isActive:
-            q.stop()
-
-    # simulate dying between backup-out and swap-in, with a torn temp
-    _os.rename(target, target + ".old")
-    _os.makedirs(target + "._epoch99")
-
-    q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    assert not _os.path.exists(target + ".old")
-    assert not _os.path.exists(target + "._epoch99")
-    ev = read_table(spark, SMOKE_SF, "events")
-    want = (
-        ev.withColumn("k", F.concat_ws("|", F.col("user_id"), F.col("event_type")))
-        .groupBy("k")
-        .agg(F.max("ts").alias("ts"))
-    )
-    merged = spark.read.parquet(target)
-    got = {(r["k"], r["ts"]) for r in merged.select("k", "ts").collect()}
-    assert got == {(r["k"], r["ts"]) for r in want.collect()}
-
-
 def test_daily_counters_checkpoint_restart(spark, split_events_dir, tmp_path):
     """SS2 (p08's aggregation) restart: the windowed-aggregation STATE
     STORE must recover from the checkpoint — stop after ~2 of 6
@@ -691,12 +527,12 @@ def test_partitioned_merge_sink_upserts_and_prunes(spark, tmp_path):
     assert touched == [f"bucket={bk}"]
 
 
-def test_partitioned_merge_sink_matches_full_table_sink(spark, split_events_dir, tmp_path):
-    """Equivalence on the events fixture: the bucket-partitioned sink
-    and the full-rewrite merge_sink converge to the same table."""
+def test_partitioned_merge_sink_matches_batch_upsert(spark, split_events_dir, tmp_path):
+    """Equivalence on the events fixture: replaying every event through
+    the bucket-partitioned sink converges to the batch truth over the
+    same events — the latest (k, ts, value) per key."""
     from trendr_data_pipeline_spark.streaming.jobs import (
         events_stream,
-        merge_sink,
         partitioned_merge_sink,
         read_merge_target,
     )
@@ -706,79 +542,28 @@ def test_partitioned_merge_sink_matches_full_table_sink(spark, split_events_dir,
             "k", F.concat_ws("|", F.col("user_id"), F.col("event_type"))
         )
 
-    t1, c1 = str(tmp_path / "full"), str(tmp_path / "ck1")
-    t2, c2 = str(tmp_path / "part"), str(tmp_path / "ck2")
-    q1 = merge_sink(keyed(events_stream(spark, split_events_dir)), t1, key="k",
-                    version_col="ts", checkpoint_dir=c1)
+    target, ckpt = str(tmp_path / "part"), str(tmp_path / "ck")
+    q = partitioned_merge_sink(keyed(events_stream(spark, split_events_dir)), target,
+                               key="k", version_col="ts", checkpoint_dir=ckpt, buckets=16)
     try:
-        q1.processAllAvailable()
+        q.processAllAvailable()
     finally:
-        q1.stop()
-    q2 = partitioned_merge_sink(keyed(events_stream(spark, split_events_dir)), t2,
-                                key="k", version_col="ts", checkpoint_dir=c2, buckets=16)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    full = {tuple(r) for r in spark.read.parquet(t1).select("k", "ts", "value").collect()}
-    part = {tuple(r) for r in read_merge_target(spark, t2).select("k", "ts", "value").collect()}
-    assert part == full
+        q.stop()
 
-
-def _delta_available() -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec("delta") is not None
-
-
-# collection-time probe, not importorskip: while delta-spark is absent
-# (this image) the delta param simply doesn't exist — 0 skipped tests —
-# and the equivalence leg activates automatically when it lands
-@pytest.mark.parametrize("leg", ["gate"] + (["delta"] if _delta_available() else []))
-def test_delta_merge_leg(spark, split_events_dir, tmp_path, leg):
-    """r5 verdict item 5: the table-format MERGE leg. Without
-    delta-spark on the classpath the leg must refuse loudly with the
-    parquet-swap fallback instruction (never half-work); with it, the
-    MERGE INTO path must converge to the same table as merge_sink."""
-    from trendr_data_pipeline_spark.streaming.jobs import (
-        delta_merge_sink,
-        events_stream,
-        merge_sink,
-    )
-
-    def keyed(stream):
-        return stream.withColumn(
-            "k", F.concat_ws("|", F.col("user_id"), F.col("event_type"))
-        )
-
-    if leg == "gate" and not _delta_available():
-        with pytest.raises(ImportError, match="partitioned_merge_sink"):
-            delta_merge_sink(
-                keyed(events_stream(spark, split_events_dir)),
-                str(tmp_path / "d"), key="k", version_col="ts",
-                checkpoint_dir=str(tmp_path / "ckd"),
-            )
-        return
-    t1, c1 = str(tmp_path / "full"), str(tmp_path / "ck1")
-    t2, c2 = str(tmp_path / "delta"), str(tmp_path / "ck2")
-    q1 = merge_sink(keyed(events_stream(spark, split_events_dir)), t1, key="k",
-                    version_col="ts", checkpoint_dir=c1)
-    try:
-        q1.processAllAvailable()
-    finally:
-        q1.stop()
-    q2 = delta_merge_sink(keyed(events_stream(spark, split_events_dir)), t2,
-                          key="k", version_col="ts", checkpoint_dir=c2)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    full = {tuple(r) for r in spark.read.parquet(t1).select("k", "ts", "value").collect()}
-    delt = {
-        tuple(r)
-        for r in spark.read.format("delta").load(t2).select("k", "ts", "value").collect()
-    }
-    assert delt == full
+    # plain-Python oracle: newest row per key; a tie on a key's newest
+    # ts would make the expected value ambiguous, so rule it out first
+    latest: dict = {}
+    for r in keyed(read_table(spark, SMOKE_SF, "events")).select("k", "ts", "value").collect():
+        cur = latest.get(r["k"])
+        if cur is None or r["ts"] > cur[0]:
+            latest[r["k"]] = (r["ts"], [r["value"]])
+        elif r["ts"] == cur[0]:
+            cur[1].append(r["value"])
+    assert all(len(vals) == 1 for _, vals in latest.values())
+    want = {(k, ts, vals[0]) for k, (ts, vals) in latest.items()}
+    got = read_merge_target(spark, target).select("k", "ts", "value").collect()
+    assert len(got) == len(want)
+    assert {tuple(r) for r in got} == want
 
 
 def test_partitioned_merge_sink_checkpoint_restart(spark, split_events_dir, tmp_path):
@@ -843,6 +628,67 @@ def test_partitioned_merge_sink_checkpoint_restart(spark, split_events_dir, tmp_
     assert got == {(r["k"], r["ts"]) for r in want.collect()}
 
 
+def test_heal_bucket_layout_crash_states(spark, tmp_path):
+    """The bucket swap's three crash states, each repaired by the
+    writer's _heal_bucket_layout: only the hidden backup present →
+    restored; visible bucket and backup both present → backup dropped;
+    a torn ``._epoch*`` tree next to a clean layout → tree dropped and
+    the layout left untouched (same files, same inodes). In every state
+    a reader sees each key exactly once."""
+    from trendr_data_pipeline_spark.streaming.jobs import (
+        _heal_bucket_layout,
+        read_merge_target,
+    )
+
+    target = str(tmp_path / "tbl")
+    rows = [(f"k{i}", i % 2, float(i)) for i in range(6)]
+    (
+        spark.createDataFrame(rows, "k string, bucket int, v double")
+        .write.partitionBy("bucket").parquet(target)
+    )
+    want = {(k, v) for k, _, v in rows}
+
+    def reader_sees_each_key_once():
+        got = [(r["k"], r["v"]) for r in read_merge_target(spark, target).collect()]
+        assert len(got) == len(want)
+        assert set(got) == want
+
+    def layout():
+        return {
+            (root, f, os.stat(os.path.join(root, f)).st_ino)
+            for root, _, files in os.walk(target)
+            for f in files
+        }
+
+    visible = os.path.join(target, "bucket=0")
+    backup = os.path.join(target, "._old_bucket=0")
+
+    # died between backup-out and swap-in: only the backup exists
+    os.rename(visible, backup)
+    _heal_bucket_layout(target)
+    assert os.path.isdir(visible) and not os.path.exists(backup)
+    reader_sees_each_key_once()
+
+    # swap finished, backup not dropped: the hidden backup never leaks
+    # duplicate rows to a reader, and the heal drops it
+    shutil.copytree(visible, backup)
+    reader_sees_each_key_once()
+    _heal_bucket_layout(target)
+    assert os.path.isdir(visible) and not os.path.exists(backup)
+    reader_sees_each_key_once()
+
+    # torn epoch temp tree beside a clean layout
+    clean = layout()
+    torn = os.path.join(target + "._epoch7", "bucket=1")
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"PAR1")
+    _heal_bucket_layout(target)
+    assert not os.path.exists(target + "._epoch7")
+    assert layout() == clean
+    reader_sees_each_key_once()
+
+
 # ---------------------------------------------------------------------------
 # r7: null keys, tie rule, and footer-stat truncation safety
 # ---------------------------------------------------------------------------
@@ -851,61 +697,42 @@ def test_partitioned_merge_sink_checkpoint_restart(spark, split_events_dir, tmp_
 def test_partitioned_merge_sink_null_keys(spark, tmp_path):
     """r6 ADVICE (medium): a NULL key must not kill the stream. Footer
     min/max stats never cover nulls, so the pruned sink force-rewrites
-    the null bucket's files; the final state must equal the
-    full-rewrite merge_sink's on the same waves (null behaves like
-    any other key: latest version wins)."""
+    the null bucket's files; null behaves like any other key: latest
+    version wins."""
     import datetime as dt
 
     from trendr_data_pipeline_spark.streaming.jobs import (
-        merge_sink,
         partitioned_merge_sink,
         read_merge_target,
     )
 
     t0 = dt.datetime(2025, 1, 1)
-    waves = [
-        [("a", t0, 1.0), (None, t0, 10.0), ("b", t0, 2.0)],
-        [(None, t0 + dt.timedelta(days=1), 20.0),
-         ("a", t0 + dt.timedelta(days=1), 11.0)],
-    ]
+    d = _wave_dir(tmp_path)
+    target = str(tmp_path / "tbl")
+    _write_wave(spark, d, 1, [("a", t0, 1.0), (None, t0, 10.0), ("b", t0, 2.0)])
+    q = partitioned_merge_sink(_kv_stream(spark, d), target, key="k", version_col="ts",
+                               checkpoint_dir=str(tmp_path / "ck"), buckets=4,
+                               max_records_per_file=2)
+    try:
+        q.processAllAvailable()
+        _write_wave(spark, d, 2, [(None, t0 + dt.timedelta(days=1), 20.0),
+                                  ("a", t0 + dt.timedelta(days=1), 11.0)])
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    results = []
-    for sink, kw in (
-        (partitioned_merge_sink, {"buckets": 4, "max_records_per_file": 2}),
-        (merge_sink, {}),
-    ):
-        (tmp_path / sink.__name__).mkdir()
-        d = _wave_dir(tmp_path / sink.__name__)
-        target = str(tmp_path / sink.__name__ / "tbl")
-        ckpt = str(tmp_path / sink.__name__ / "ck")
-        _write_wave(spark, d, 1, waves[0])
-        q = sink(_kv_stream(spark, d), target, key="k", version_col="ts",
-                 checkpoint_dir=ckpt, **kw)
-        try:
-            q.processAllAvailable()
-            _write_wave(spark, d, 2, waves[1])
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        read = read_merge_target if sink is partitioned_merge_sink else (
-            lambda s, t: s.read.parquet(t)
-        )
-        results.append({(r["k"], r["v"]) for r in read(spark, target).collect()})
-
-    assert results[0] == results[1] == {("a", 11.0), ("b", 2.0), (None, 20.0)}
+    got = [(r["k"], r["v"]) for r in read_merge_target(spark, target).collect()]
+    assert len(got) == 3
+    assert set(got) == {("a", 11.0), ("b", 2.0), (None, 20.0)}
 
 
 def test_merge_tie_rule_legs_agree(spark):
-    """r6 verdict item 4: the parquet leg (upsert_latest's window) and
-    the Delta leg's MERGE condition (merge_match_condition) must
-    resolve version ties identically — incoming wins — WITHOUT delta
-    on the classpath, by simulating MERGE INTO semantics in plain
-    DataFrame ops from the exact condition string the Delta leg
-    compiles."""
-    from trendr_data_pipeline_spark.operators.ingestion import (
-        merge_match_condition,
-        upsert_latest,
-    )
+    """The upsert tie rule, pinned literally on upsert_latest (the body
+    of partitioned_merge_sink): an incoming row replaces the stored
+    one iff its version is >= — equal versions go to the INCOMING row
+    — and a NULL version never beats a real one. Unmatched rows of
+    either side are kept."""
+    from trendr_data_pipeline_spark.operators.ingestion import upsert_latest
 
     target = spark.createDataFrame(
         [("tie", 5, "stored"), ("older", 5, "stored"),
@@ -922,32 +749,18 @@ def test_merge_tie_rule_legs_agree(spark):
         "k string, v int, src string",
     )
 
-    # the parquet legs' rule
-    window_leg = {tuple(r) for r in upsert_latest(target, source, "k", "v").collect()}
-
-    # the Delta leg's *specified* outcome: MERGE matched-update-where-
-    # condition + not-matched-insert, from the shared condition string
-    # MERGE updates when the condition is TRUE and keeps the stored
-    # row otherwise — including when it evaluates to NULL (SQL
-    # three-valued logic), so the simulation coalesces to FALSE
-    cond = F.coalesce(F.expr(merge_match_condition("v")), F.lit(False))
-    t, s = target.alias("t"), source.alias("s")
-    j = t.join(s, F.col("t.k") == F.col("s.k"), "left")
-    kept = j.where(F.col("s.k").isNull() | ~cond).select("t.*")
-    updated = j.where(F.col("s.k").isNotNull() & cond).select("s.*")
-    inserted = s.join(t, "k", "left_anti")
-    merge_leg = {tuple(r) for r in kept.unionByName(updated)
-                 .unionByName(inserted).collect()}
-
-    assert window_leg == merge_leg
-    assert ("tie", 5, "incoming") in window_leg       # tie → incoming
-    assert ("older", 5, "stored") in window_leg       # lower version loses
-    assert ("newer", 6, "incoming") in window_leg
-    # NULL-version rule (r7 review): a NULL stored version always
-    # loses; a NULL incoming version loses to a versioned stored row
-    assert ("t_null", 3, "incoming") in window_leg
-    assert ("s_null", 5, "stored") in window_leg
-    assert ("both_null", None, "incoming") in window_leg
+    got = upsert_latest(target, source, "k", "v").collect()
+    assert len(got) == 8
+    assert {tuple(r) for r in got} == {
+        ("tie", 5, "incoming"),         # tie → incoming
+        ("older", 5, "stored"),         # lower version loses
+        ("newer", 6, "incoming"),
+        ("only_t", 1, "stored"),        # unmatched stored row kept
+        ("only_s", 1, "incoming"),      # unmatched incoming row inserted
+        ("t_null", 3, "incoming"),      # a NULL stored version loses
+        ("s_null", 5, "stored"),        # a NULL incoming version loses
+        ("both_null", None, "incoming"),  # NULL vs NULL is a tie → incoming
+    }
 
 
 def test_partitioned_merge_sink_long_high_byte_keys(spark, tmp_path):
@@ -957,12 +770,11 @@ def test_partitioned_merge_sink_long_high_byte_keys(spark, tmp_path):
     parquet-java either pads the truncated max upward (conservative:
     extra hits, never a wrong prune) or drops the stats entirely when
     padding is impossible (all-0xFF suffix → always-hit). Either way no
-    upsert may be silently dropped: the final table must equal the
-    full-rewrite merge_sink's."""
+    upsert may be silently dropped: the final table must hold every
+    key once with its latest value."""
     import datetime as dt
 
     from trendr_data_pipeline_spark.streaming.jobs import (
-        merge_sink,
         partitioned_merge_sink,
         read_merge_target,
     )
@@ -980,36 +792,26 @@ def test_partitioned_merge_sink_long_high_byte_keys(spark, tmp_path):
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     hconf.set("parquet.statistics.truncate.length", "16")
     try:
-        results = []
-        for sink, kw in (
-            (partitioned_merge_sink, {"buckets": 2, "max_records_per_file": 4}),
-            (merge_sink, {}),
-        ):
-            (tmp_path / sink.__name__).mkdir()
-            d = _wave_dir(tmp_path / sink.__name__)
-            target = str(tmp_path / sink.__name__ / "tbl")
-            ckpt = str(tmp_path / sink.__name__ / "ck")
-            _write_wave(spark, d, 1, w1)
-            q = sink(_kv_stream(spark, d), target, key="k", version_col="ts",
-                     checkpoint_dir=ckpt, **kw)
-            try:
-                q.processAllAvailable()
-                _write_wave(spark, d, 2, w2)
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            read = read_merge_target if sink is partitioned_merge_sink else (
-                lambda s, t: s.read.parquet(t)
-            )
-            results.append(
-                {(r["k"], r["v"]) for r in read(spark, target).collect()}
-            )
+        d = _wave_dir(tmp_path)
+        target = str(tmp_path / "tbl")
+        _write_wave(spark, d, 1, w1)
+        q = partitioned_merge_sink(_kv_stream(spark, d), target, key="k",
+                                   version_col="ts", checkpoint_dir=str(tmp_path / "ck"),
+                                   buckets=2, max_records_per_file=4)
+        try:
+            q.processAllAvailable()
+            _write_wave(spark, d, 2, w2)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = [(r["k"], r["v"]) for r in read_merge_target(spark, target).collect()]
     finally:
         hconf.unset("parquet.statistics.truncate.length")
 
     expect = {(k, float(i)) for i, k in enumerate(keys) if i % 7 != 0}
     expect |= {(k, 1000.0 + i) for i, k in enumerate(keys) if i % 7 == 0}
-    assert results[0] == results[1] == expect
+    assert len(got) == len(expect)
+    assert set(got) == expect
 
 
 def test_token_bucket_single_batch_matches_batch_twin(spark, events_dir):

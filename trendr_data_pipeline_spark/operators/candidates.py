@@ -68,11 +68,12 @@ def exclude_domains(
     """Drop candidates whose domain is (or is a subdomain of) an
     excluded domain — U5 union of social networks and review sites,
     applied as a broadcast-able literal-array predicate, BEFORE any
-    scoring UDF touches the stream (§4 dedup-before-expensive-work)."""
+    scoring UDF touches the stream (§4 dedup-before-expensive-work).
+    A null domain matches nothing and is kept."""
     exc = F.array(*[F.lit(d) for d in (excluded or SOCIAL_NETWORKS + REVIEW_SITES)])
     d = F.lower(F.col(domain_col))
     hit = F.exists(exc, lambda e: (d == e) | F.endswith(d, F.concat(F.lit("."), e)))
-    return candidates.filter(~hit)
+    return candidates.filter(~F.coalesce(hit, F.lit(False)))
 
 
 # ---------------------------------------------------------------------------

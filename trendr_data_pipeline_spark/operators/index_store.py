@@ -19,8 +19,8 @@ Layout under ``<index_dir>/``:
                  still needed for the exact rescore, as in
                  :func:`~.similarity.pq_topk`).
 
-Writes go through a temp-dir + atomic-rename swap (same two-phase
-posture as ``streaming/jobs.merge_sink``): readers never observe a
+Writes go through a temp-dir + atomic-rename swap (the two-phase
+posture of ``streaming/jobs._swap_bucket_dirs``): readers never observe a
 half-written index, and a rebuild atomically replaces the old one.
 
 Determinism: training is the same hash-ordered-sample numpy as the
@@ -62,7 +62,7 @@ def _atomic_write(out_dir: str, write_parts) -> None:
     first: a ``.old`` left by a build that died between swap-in and
     cleanup would otherwise make EVERY later rebuild's backup rename
     fail (ENOTEMPTY) until someone deleted it by hand — the same
-    recovery contract as ``streaming/jobs.merge_sink``."""
+    recovery contract as ``streaming/jobs._heal_bucket_layout``."""
     import shutil
 
     _heal_crash_residue(out_dir)

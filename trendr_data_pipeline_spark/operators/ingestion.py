@@ -90,44 +90,22 @@ def classify_novelty(score: Column) -> Column:
     )
 
 
-# S10 — batch upsert as window-dedup-latest (no Delta in this image):
-def merge_match_condition(
-    version_col: str, source: str = "s", target: str = "t"
-) -> str:
-    """The ONE latest-wins/tie rule every merge leg shares: an incoming
-    (source) row replaces the stored (target) row iff its version is
-    ``>=`` — equal versions go to the INCOMING row — and a NULL stored
-    version always loses (it carries no recency claim). The parquet
-    legs implement this rule via :func:`upsert_latest`'s window
-    ordering (version desc — which puts NULLs LAST — then an
-    is-incoming flag desc); the ``OR t IS NULL`` arm below is what
-    makes the SQL form agree with that ordering on every NULL
-    combination (bare ``s.v >= t.v`` evaluates to NULL — no update —
-    whenever either side is NULL, silently diverging from the window
-    leg on NULL-version rows; r7 review finding). The Delta leg
-    (streaming/jobs.py delta_merge_sink) compiles this exact string
-    into ``whenMatchedUpdateAll(condition=...)``. Tie-heavy AND
-    null-version equivalence of the two legs' *specified* outcomes is
-    pinned in tests/test_streaming.py (r6 verdict item 4) without
-    delta on the classpath."""
-    s, t = f"{source}.{version_col}", f"{target}.{version_col}"
-    return f"{s} >= {t} OR {t} IS NULL"
-
-
+# S10 — batch upsert as window-dedup-latest
 def upsert_latest(
     existing: DataFrame, incoming: DataFrame, key: str, version_col: str
 ) -> DataFrame:
     """MERGE-equivalent for append-only storage: union both sides, keep
-    the newest row per key. At scale this is the standard
-    'window-dedup-latest' rewrite of MERGE INTO; with Delta/Iceberg on
-    the classpath the same call becomes a real MERGE (SURVEY §2.1 S10,
-    reference google_places_ingester.py:445-514).
+    the newest row per key — the standard 'window-dedup-latest'
+    rewrite of MERGE INTO (SURVEY §2.1 S10, reference
+    google_places_ingester.py:445-514). It is the body of every upsert
+    in the package, batch or streaming (``partitioned_merge_sink``).
 
-    Tie rule (:func:`merge_match_condition`): equal versions go to the
-    INCOMING row — the is-incoming flag below makes the window
-    deterministic on version ties, matching the Delta leg's
-    ``s.version >= t.version`` exactly (r6 ADVICE: the flag-less window
-    picked a nondeterministic winner and the two legs could diverge)."""
+    Tie rule, all in the one window below: version descending, which
+    puts NULL versions LAST (a NULL version carries no recency claim
+    and loses to any real one), then the is-incoming flag descending,
+    so on equal versions the INCOMING row wins. The flag makes the
+    winner deterministic on existing-vs-incoming ties (pinned in
+    tests/test_streaming.py::test_merge_tie_rule_legs_agree)."""
     w = Window.partitionBy(key).orderBy(
         F.col(version_col).desc(), F.col("_is_incoming").desc()
     )

@@ -56,6 +56,9 @@ def resolve_source(candidates: DataFrame, source_catalog: DataFrame) -> DataFram
     Ties in the suffix pass break on longest catalog domain then
     source_id (the reference takes first match in catalog order —
     nondeterministic; we pin it, SURVEY §4 determinism discipline).
+    The suffix pass needs a non-empty candidate domain: every string
+    ends with ``""``, so an empty domain would otherwise take the
+    source of the longest catalog domain.
 
     Reference: utils/database.py:617-688.
     """
@@ -75,11 +78,11 @@ def resolve_source(candidates: DataFrame, source_catalog: DataFrame) -> DataFram
     # domain listed twice in the catalog resolves twice, as the exact
     # pass always did); suffix matches only apply to (poi_id, url)
     # groups with no exact match, pinned to longest-domain/lowest-id.
+    dom, cat_dom = candidates["domain"], cat["catalog_domain"]
     both = candidates.join(
         cat,
-        (candidates["domain"] == cat["catalog_domain"])
-        | F.endswith(candidates["domain"], cat["catalog_domain"])
-        | F.endswith(cat["catalog_domain"], candidates["domain"]),
+        (dom == cat_dom)
+        | ((F.length(dom) > 0) & (F.endswith(dom, cat_dom) | F.endswith(cat_dom, dom))),
         "left",
     ).withColumn("_exact", F.col("domain") == F.col("catalog_domain"))
     w = Window.partitionBy("poi_id", "url").orderBy(
@@ -100,7 +103,6 @@ def score_candidates(
     source_catalog: DataFrame,
     as_of: Column,
     decay_enabled: bool = False,
-    salt_profiles: int | None = None,
 ) -> DataFrame:
     """Full scoring plan: returns candidates + name/geo/authority
     components, penalties, final_score, decision, accepted_by.
@@ -108,27 +110,11 @@ def score_candidates(
     ``candidates`` must carry: poi_id, poi_name, city_slug, url, title,
     snippet, domain (nullable — derived from url when null), poi_lat,
     poi_lng, published_at.
-
-    ``city_slug`` is the pipeline's canonical SKEW key — on a real
-    corpus one city holds a large fraction of all candidates, so if
-    the profile dimension ever outgrows broadcast (per-city model
-    blobs, embedding columns), the shuffled join would pile the hot
-    city onto one reducer. ``salt_profiles=N`` switches this join to
-    :func:`operators.skew.salted_join` (hot key sharded across N
-    reducers, profiles replicated N×) — output identical to the
-    broadcast plan (pinned in tests/test_skew.py). Default stays
-    broadcast: with a dim that fits in memory, broadcast always wins.
     """
     c = candidates.withColumn(
         "domain", F.coalesce(F.col("domain"), domain_of(F.col("url")))
     ).withColumn("url_norm", normalize_url(F.col("url")))
-
-    if salt_profiles:
-        from .skew import salted_join
-
-        c = salted_join(c, city_profiles, on="city_slug", salts=salt_profiles, how="left")
-    else:
-        c = c.join(F.broadcast(city_profiles), "city_slug", "left")
+    c = c.join(F.broadcast(city_profiles), "city_slug", "left")
 
     c = resolve_source(c, source_catalog)
     c = c.withColumn("authority", F.coalesce(F.col("cat_authority"), F.lit(0.4)))
@@ -199,7 +185,6 @@ def windowed_dedup(
     mentions: DataFrame,
     as_of: Column,
     max_per_window: int = 2,
-    use_source_override: bool = True,
 ) -> DataFrame:
     """W1: keep the top-N mentions per (source_id, dedupe_key), ranked
     by authority_weight·w_time desc (reference dedup.py:47-96), rank
@@ -213,7 +198,7 @@ def windowed_dedup(
     the reference's swallowed ``re.sub`` error does.
     """
     key = dedupe_key(F.col("url"))
-    if use_source_override and "dedup_pattern" in mentions.columns:
+    if "dedup_pattern" in mentions.columns:
         repl = (
             F.col("dedup_replacement")
             if "dedup_replacement" in mentions.columns

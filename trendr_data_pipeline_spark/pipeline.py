@@ -16,7 +16,7 @@ The result owns those checkpoints until it is released:
 ``write_outputs`` releases it after its last write, and a caller that
 never writes calls ``PipelineResult.release``. Sinks (parquet/MERGE)
 are the caller's choice — see ``operators/ingestion.upsert_latest`` and
-``streaming/jobs.merge_sink``.
+``streaming/jobs.partitioned_merge_sink``.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .functions.text import domain_of
 from .operators.candidates import cap_accepted_per_poi, exclude_domains
 from .operators.classifier import classify, score_percentiles, status_transitions
 from .operators.collections import (
@@ -170,9 +171,15 @@ def run_auto_pipeline(
     # spatial association (J1)
     associated = associate_pois(poi, urban_areas)
 
-    # mention scan (§3.2): exclusions → scoring → decision → dedup → cap
+    # mention scan (§3.2): exclusions → scoring → decision → dedup → cap.
+    # A null domain is the url's host, derived before the exclusions so
+    # they and the catalog join both see it
     scored_cands = score_candidates(
-        exclude_domains(candidates.withColumn("domain", F.coalesce(F.col("domain"), F.lit("")))),
+        exclude_domains(
+            candidates.withColumn(
+                "domain", F.coalesce(F.col("domain"), domain_of(F.col("url")))
+            )
+        ),
         city_profiles,
         source_catalog,
         as_of,

@@ -470,170 +470,6 @@ def run_to_memory(
 # ---------------------------------------------------------------------------
 
 
-def recover_merge_target(target_dir: str) -> None:
-    """Bring a :func:`merge_sink` target back to a readable state after
-    a crash anywhere in the two-phase swap. Invariant the swap keeps: a
-    COMPLETE copy of the table always exists as either ``target`` or
-    ``target.old`` —
-
-    - target present, ``.old`` present → swap finished but cleanup
-      didn't: drop the stale ``.old``;
-    - target missing, ``.old`` present → crashed between backup-out
-      and swap-in: restore ``.old`` as the target;
-    - leftover ``._epoch*`` temp dirs are incomplete writes → dropped.
-
-    WRITER-ONLY: this mutates the layout (renames dirs, deletes
-    ``._epoch*`` temp dirs), so it must run only when no merge_sink
-    batch is in flight — concurrent with an active writer it would
-    delete the in-flight temp dir or resurrect ``.old`` mid-swap.
-    Readers need no recovery call: a complete copy always exists, so
-    a reader that races the swap just retries the open.
-    """
-    import glob
-    import os
-    import shutil
-
-    old = target_dir + ".old"
-    if os.path.exists(target_dir):
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    elif os.path.exists(old):
-        os.rename(old, target_dir)
-    # escape the table path: glob metacharacters in a directory name
-    # (e.g. '/data/tbl[1]') must match literally, not as a pattern
-    for tmp in glob.glob(glob.escape(target_dir) + "._epoch*"):
-        shutil.rmtree(tmp)
-
-
-def merge_sink(
-    stream: DataFrame,
-    target_dir: str,
-    key: str,
-    version_col: str,
-    checkpoint_dir: str,
-):
-    """Streaming MERGE: each micro-batch is window-dedup-upserted into
-    a parquet target (late/duplicate arrivals update rather than
-    append — the reference's last_seen_at refresh,
-    utils/database.py:862-891). With Delta on the classpath the body
-    becomes a real MERGE INTO; the contract is identical.
-
-    The parquet swap is CRASH-SAFE via two-phase rename (target →
-    ``.old``, tmp → target, drop ``.old``): a full readable copy
-    exists at every intermediate state, and
-    :func:`recover_merge_target` (run at the start of every batch by
-    THE WRITER — it mutates the layout, so it must never run
-    concurrently with an active writer; readers should simply retry
-    on a missing dir, a full copy always exists) restores the
-    canonical layout after a crash. The
-    r3 form (rmtree target, then rename tmp) lost the table if the
-    process died between the two calls.
-
-    Returns the started StreamingQuery."""
-    from ..operators.ingestion import upsert_latest
-
-    def do_merge(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        import os
-        import shutil
-
-        recover_merge_target(target_dir)
-        if os.path.exists(target_dir):
-            existing = spark.read.parquet(target_dir)
-            merged = upsert_latest(existing, batch, key=key, version_col=version_col)
-        else:
-            merged = upsert_latest(
-                batch.limit(0), batch, key=key, version_col=version_col
-            )
-        # write to a temp dir then two-phase-swap — parquet has no
-        # transactional overwrite; Delta/Iceberg make this a real commit
-        tmp = target_dir + f"._epoch{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_dir + ".old"
-        if os.path.exists(target_dir):
-            os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-    return (
-        stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-def delta_merge_sink(
-    stream: DataFrame,
-    target_dir: str,
-    key: str,
-    version_col: str,
-    checkpoint_dir: str,
-):
-    """True table-format MERGE leg (r5 verdict item 5): when
-    ``delta-spark`` is on the classpath, each micro-batch compiles to
-    ``MERGE INTO`` with Delta's own file-level pruning, snapshot
-    isolation and conflict detection — the contract is IDENTICAL to
-    :func:`merge_sink` / :func:`partitioned_merge_sink` (latest row
-    per key by ``version_col``, idempotent under checkpoint replay,
-    the reference's keyed upsert, utils/database.py:812-938).
-
-    This image ships no delta-spark (and the build forbids installs),
-    so the leg is import-gated: it raises ``ImportError`` with the
-    fallback instruction, and the sink equivalence/restart tests in
-    tests/test_streaming.py parameterize over this leg automatically
-    the moment ``delta`` becomes importable (collection-time probe —
-    no skipped tests while it is absent).
-
-    Requires the session be built with the Delta extensions
-    (``spark.sql.extensions`` + catalog), as documented by
-    delta-spark; the merge condition is the SHARED rule
-    :func:`~..operators.ingestion.merge_match_condition` — update only
-    when the incoming version is >= the stored one, ties to the
-    incoming row — the same rule ``upsert_latest``'s window implements
-    via its is-incoming flag, so the legs cannot diverge on version
-    ties (equivalence pinned in tests/test_streaming.py)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError as ex:  # pragma: no cover - exercised via test gate
-        raise ImportError(
-            "delta-spark is not on the classpath; use "
-            "partitioned_merge_sink (parquet two-phase swap with "
-            "bucket- and file-level pruning) — the upsert contract is "
-            "identical"
-        ) from ex
-
-    from ..operators.ingestion import merge_match_condition, upsert_latest
-
-    def do_merge(batch: DataFrame, epoch_id: int) -> None:
-        from delta.tables import DeltaTable
-
-        spark = batch.sparkSession
-        # within-batch dedup first: MERGE requires a unique source key
-        latest = upsert_latest(
-            batch.limit(0), batch, key=key, version_col=version_col
-        )
-        if not DeltaTable.isDeltaTable(spark, target_dir):
-            latest.write.format("delta").mode("overwrite").save(target_dir)
-            return
-        (
-            DeltaTable.forPath(spark, target_dir)
-            .alias("t")
-            .merge(latest.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedUpdateAll(condition=merge_match_condition(version_col))
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    return (
-        stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
 def _heal_bucket_layout(target_dir: str) -> None:
     """Writer-only recovery for the bucket-partitioned merge layout
     of :func:`partitioned_merge_sink`.
@@ -650,7 +486,16 @@ def _heal_bucket_layout(target_dir: str) -> None:
     table, temporary absence is the safe failure (duplicates corrupt
     downstream aggregates; a missing bucket just reads as pre-insert
     and heals on the next batch). Torn ``._epoch*`` temp trees
-    (siblings of the table path) are incomplete writes and dropped."""
+    (siblings of the table path) are incomplete writes and dropped.
+
+    The three crash states it repairs: only ``._old_bucket=N`` present
+    (died between backup-out and swap-in) → restored as ``bucket=N``;
+    both present (swap finished, backup not dropped) → backup dropped;
+    a torn ``._epoch*`` tree next to a clean layout → tree dropped,
+    layout untouched. This is the package's only table swap protocol,
+    so it must run only when no batch of the same sink is in flight:
+    concurrent with an active writer it would delete the in-flight
+    temp tree or resurrect a backup mid-swap."""
     import glob
     import os
     import shutil
@@ -697,9 +542,9 @@ def _swap_bucket_dirs(target_dir: str, tmp: str, affected) -> None:
 
 
 def _file_key_ranges(paths: list[str], key: str) -> list[tuple[str, object, object]]:
-    """Driver-side parquet-footer (min, max) of ``key`` per file — the
-    poor man's Delta log: the stats already live in every footer, so
-    file-level pruning costs one metadata read per file of the
+    """Driver-side parquet-footer (min, max) of ``key`` per file: the
+    stats already live in every footer, so file-level pruning costs
+    one metadata read per file of the
     AFFECTED buckets only (never the whole table). Returns (path, lo,
     hi); (path, None, None) when stats are absent/unreadable (the
     caller must treat such a file as always-hit — parquet drops
@@ -884,11 +729,14 @@ def partitioned_merge_sink(
     buckets: int = 64,
     max_records_per_file: int = 1 << 20,
 ):
-    """Bucket-partitioned streaming MERGE — the file-pruned upsert
-    shape :func:`merge_sink` cannot give (r4 verdict "What's missing"
-    #2: without Delta/Iceberg on the classpath, merge_sink rewrites
-    the WHOLE table per micro-batch — O(table) per batch, which a
-    100 TB target cannot afford).
+    """The streaming MERGE: each micro-batch is window-dedup-upserted
+    into a bucket-partitioned parquet target, so late or duplicate
+    arrivals update their row in place instead of appending (latest
+    ``version_col`` per ``key`` wins — the reference's keyed upsert
+    and ``last_seen_at`` refresh, utils/database.py:812-938). A batch
+    rewrites only the files whose key range holds one of its keys
+    (every file of a bucket that receives a NULL key), so its cost
+    follows the batch, not the table.
 
     Layout: ``target_dir/bucket=N/`` with ``bucket =
     pmod(xxhash64(key), buckets)``, files KEY-SORTED and
@@ -906,7 +754,7 @@ def partitioned_merge_sink(
     4. writes the merged rows key-sorted (``maxRecordsPerFile`` keeps
        files range-disjoint), hard-links every pruned file unchanged,
        and swaps ONLY the affected bucket directories through the
-       same crash-safe two-phase rename as :func:`merge_sink`.
+       crash-safe two-phase rename of :func:`_swap_bucket_dirs`.
 
     Per-batch rewrite volume is O(hit files + batch) ≈
     O(batch_keys · rows_per_file), not O(table) and no longer
@@ -917,10 +765,7 @@ def partitioned_merge_sink(
     BATCH-level atomicity is deliberately not needed — the
     checkpoint replays the interrupted batch and the upsert is
     idempotent, so a crash that updated only some buckets converges
-    on restart (pinned in tests/test_streaming.py). With
-    Delta/Iceberg on the classpath this whole function becomes
-    ``MERGE INTO`` with file pruning; the contract — including the
-    file-skipping shape — is identical.
+    on restart (pinned in tests/test_streaming.py).
 
     Returns the started StreamingQuery."""
     bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(buckets))
