@@ -71,12 +71,19 @@ def make_domain_fixtures(n_pois: int = 60):
 
 
 def stage_stream_file(spark, stream_dir, name, df_or_rows, schema=None):
-    """Write one single-file parquet 'wave' a file-stream source will
-    pick up: stage via Spark, flatten the part file up to
-    ``<stream_dir>/<name>.parquet``, drop the staging dir. The ONE
-    copy of the staging protocol the streaming tests previously
-    re-derived per test (r7 review)."""
+    """Add one single-file parquet 'wave' to the watched directory
+    ``stream_dir`` atomically, as ``<stream_dir>/<name>.parquet``: the
+    ONE staging protocol of the streaming tests.
+
+    Spark writes the wave into a SIBLING scratch dir outside the
+    watched tree, and the single part file is then ``os.rename``d in.
+    A scratch dir inside ``stream_dir`` races the running query's
+    recursive listing: the listing can see the part file just before
+    it is moved away and the scratch dir deleted, and the batch then
+    fails on the vanished path. A rename within one filesystem is
+    atomic, so the listing only ever sees a complete file or nothing."""
     import glob
+    import os
     import shutil
 
     df = (
@@ -84,8 +91,8 @@ def stage_stream_file(spark, stream_dir, name, df_or_rows, schema=None):
         if hasattr(df_or_rows, "write")
         else spark.createDataFrame(df_or_rows, schema)
     )
-    stage = f"{stream_dir}/{name}__stage"
-    df.coalesce(1).write.parquet(stage)
-    for f in glob.glob(f"{stage}/*.parquet"):
-        shutil.move(f, f"{stream_dir}/{name}.parquet")
-    shutil.rmtree(stage)
+    scratch = f"{stream_dir}.__stage_{name}"
+    df.coalesce(1).write.parquet(scratch)
+    (part,) = glob.glob(f"{scratch}/*.parquet")
+    os.rename(part, f"{stream_dir}/{name}.parquet")
+    shutil.rmtree(scratch)

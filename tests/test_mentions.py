@@ -184,7 +184,8 @@ def oracle_final(c, prof):
 
 
 @pytest.fixture(scope="module")
-def scored(spark):
+def scoring_inputs(spark):
+    """``score_candidates``'s arguments over the module's fixtures."""
     cand_schema = (
         "poi_id string, poi_name string, city_slug string, url string, title string,"
         " snippet string, domain string, poi_lat double, poi_lng double, published_at timestamp"
@@ -206,8 +207,12 @@ def scored(spark):
         [tuple(r[f.name] for f in DOMAIN["source_catalog"].fields) for r in cat_rows],
         DOMAIN["source_catalog"],
     )
-    out = score_candidates(cands, profs, cat, F.lit(AS_OF.isoformat()).cast("timestamp"))
-    return {r["poi_id"]: r for r in out.collect()}
+    return cands, profs, cat, F.lit(AS_OF.isoformat()).cast("timestamp")
+
+
+@pytest.fixture(scope="module")
+def scored(scoring_inputs):
+    return {r["poi_id"]: r for r in score_candidates(*scoring_inputs).collect()}
 
 
 def test_mention_scoring_parity(scored):
@@ -228,6 +233,16 @@ def test_expected_decisions(scored):
     assert scored["p5"]["decision"] == "REJECT"      # no signals
     assert scored["p3"]["pen_country"] == 1.0
     assert scored["p2"]["pen_city"] == pytest.approx(0.15)
+
+
+def test_accept_filter_runs_name_score_once(scoring_inputs):
+    """The cycle's ACCEPT filter is pushed down to just above
+    ``resolve_source``'s window. It must read the per-candidate scores
+    made below that window, not evaluate its own copy of the
+    ``name_score`` pandas UDF."""
+    accepted = score_candidates(*scoring_inputs).filter(F.col("decision") == "ACCEPT")
+    plan = accepted._jdf.queryExecution().optimizedPlan().toString()
+    assert sum("ArrowEvalPython" in line for line in plan.splitlines()) == 1
 
 
 def test_resolve_source_empty_domain_takes_no_suffix_match(spark):

@@ -238,6 +238,22 @@ def test_unwritten_result_is_released(spark, inputs):
     assert _persistent_rdd_ids(spark) <= before
 
 
+def _compilations(spark) -> int:
+    """Janino compilations of generated code so far in this JVM."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_cycle_compiles_nothing(spark, inputs, tmp_path):
+    """A cycle's generated classes fit the session's codegen cache, so
+    a second cycle over the same inputs compiles none of them again."""
+    out = str(tmp_path / "out")
+    P.write_outputs(P.run_auto_pipeline(*inputs), out)
+    before = _compilations(spark)
+    P.write_outputs(P.run_auto_pipeline(*inputs), out)
+    assert _compilations(spark) - before == 0
+
+
 def test_places_payload_remap(spark):
     """S3–S5/F4: nested payload → validated, truncated poi row."""
     from trendr_data_pipeline_spark.operators.ingestion import places_payload_to_poi

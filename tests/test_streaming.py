@@ -387,29 +387,11 @@ def _wave_dir(tmp_path):
 
 
 def _write_wave(spark, d, i, rows):
-    """Stage a wave file into the watched dir ``d`` ATOMICALLY.
+    """Stage a (k, ts, v) wave file into the watched dir ``d``
+    atomically, as ``wave{i}.parquet`` (see ``stage_stream_file``)."""
+    from tests.fixtures import stage_stream_file
 
-    Writing the parquet directly under ``d`` races the stream's
-    directory listing: the writer's ``wave{i}/`` scratch dir (with its
-    ``_temporary`` children) is visible mid-write and vanishes during
-    the flatten, and the file source's recursive listing then throws
-    FileNotFoundException on the half-gone path (observed flaking
-    ``test_partitioned_merge_sink_null_keys`` in full-suite runs, r7
-    verdict item 3). Write to a SIBLING scratch dir outside the
-    watched tree, then ``os.rename`` the single part file in — rename
-    within one filesystem is atomic, so the listing only ever sees a
-    complete file or nothing."""
-    import glob as g
-    import os
-    import shutil as sh
-
-    scratch = f"{d}.__stage_wave{i}"
-    spark.createDataFrame(rows, "k string, ts timestamp, v double").coalesce(
-        1
-    ).write.parquet(scratch)
-    (part,) = g.glob(f"{scratch}/*.parquet")
-    os.rename(part, f"{d}/wave{i}.parquet")
-    sh.rmtree(scratch)
+    stage_stream_file(spark, d, f"wave{i}", rows, "k string, ts timestamp, v double")
 
 
 def _kv_stream(spark, d):

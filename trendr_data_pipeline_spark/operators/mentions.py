@@ -3,14 +3,15 @@ per-candidate Python loop (``scanner.py:732-862``) re-expressed as one
 lazy DataFrame plan —
 
 candidates → normalize (ST6) → in-batch dedup → domain exclusions (F5)
-→ catalog authority join (J4) → name score (ST4) + geo signals (M6)
-+ penalties (M7) → final score (M2) × time decay (DT7) → decision (F6)
-→ windowed dedup (W1/ST7).
+→ name score (ST4) + geo signals (M6) + penalties (M7) → catalog
+authority join (J4) → final score (M2) × time decay (DT7) → decision
+(F6) → windowed dedup (W1/ST7).
 
 Scale posture: city_profiles and source_catalog are broadcast
-dimensions; candidates shuffle once for the W1 window; the two exact-
-parity UDFs (fuzzy/trigram) run after dedup+exclusions pruned the
-stream.
+dimensions; candidates shuffle once for the W1 window. The one
+exact-parity UDF, the fused ``name_score`` (fuzzy/trigram), runs once
+per candidate, after the exclusions pruned the stream and before the
+catalog join.
 """
 
 from __future__ import annotations
@@ -110,14 +111,19 @@ def score_candidates(
     ``candidates`` must carry: poi_id, poi_name, city_slug, url, title,
     snippet, domain (nullable — derived from url when null), poi_lat,
     poi_lng, published_at.
+
+    The per-candidate scores (name, geo, penalties) read only candidate
+    and profile columns, so they are computed below ``resolve_source``'s
+    window. A filter on ``decision`` — the cycle's ACCEPT filter — is
+    pushed down to just above that window, which it cannot cross; from
+    there it reads the scores as plain columns. Computed above the
+    window, they would be substituted into the pushed filter, which
+    would then evaluate the ``name_score`` UDF a second time.
     """
     c = candidates.withColumn(
         "domain", F.coalesce(F.col("domain"), domain_of(F.col("url")))
     ).withColumn("url_norm", normalize_url(F.col("url")))
     c = c.join(F.broadcast(city_profiles), "city_slug", "left")
-
-    c = resolve_source(c, source_catalog)
-    c = c.withColumn("authority", F.coalesce(F.col("cat_authority"), F.lit(0.4)))
 
     text_all = F.lower(F.concat_ws(" ", "title", "snippet", "url"))
     c = (
@@ -139,6 +145,12 @@ def score_candidates(
             F.when(F.col("pen_country") > 0, F.col("pen_country")).otherwise(F.col("pen_city")),
         )
     )
+    scores = ["name_sc", "geo_sc", "pen_country", "pen_city", "pen_total"]
+
+    c = resolve_source(c, source_catalog)
+    c = c.withColumn("authority", F.coalesce(F.col("cat_authority"), F.lit(0.4)))
+    # the output keeps its column order: catalog columns, authority, scores
+    c = c.select(*[x for x in c.columns if x not in scores], *scores)
 
     base = W_NAME * F.col("name_sc") + W_GEO * F.col("geo_sc") + W_AUTH * F.col("authority")
     after_pen = clamp01(base - F.col("pen_total"))
