@@ -244,13 +244,16 @@ def _compilations(spark) -> int:
     return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
-def test_warm_cycle_compiles_nothing(spark, inputs, tmp_path):
+def test_warm_cycle_compiles_nothing(spark, result, inputs, tmp_path):
     """A cycle's generated classes fit the session's codegen cache, so
-    a second cycle over the same inputs compiles none of them again."""
-    out = str(tmp_path / "out")
-    P.write_outputs(P.run_auto_pipeline(*inputs), out)
+    a second cycle over the same inputs compiles none of them again.
+    The first cycle is the module's ``result``, which
+    ``test_write_outputs_partitioned`` has written; run on its own, the
+    test writes it here."""
+    if result.boundaries:
+        P.write_outputs(result, str(tmp_path / "first"))
     before = _compilations(spark)
-    P.write_outputs(P.run_auto_pipeline(*inputs), out)
+    P.write_outputs(P.run_auto_pipeline(*inputs), str(tmp_path / "out"))
     assert _compilations(spark) - before == 0
 
 

@@ -31,9 +31,19 @@ def get_spark(app_name: str = "trendr-spark", cpus: str | int | None = None) -> 
       are parity-critical text/geo functions).
     - UTC timezone so timestamp semantics match the DuckDB oracle.
     - ``spark.sql.codegen.cache.maxEntries`` (a static conf): one city
-      cycle generates about 181 classes, more than the default cache
-      of 100, so under the default every warm cycle compiled all of
-      them again. With 2000 entries the whole cycle stays compiled.
+      cycle generates about 172 classes, more than the default cache
+      of 100, so under the default every later cycle in the session
+      compiled all of them again. With 2000 entries a later cycle
+      reuses every class whose source is unchanged. Spark writes a
+      timestamp literal into the generated source, so a cycle with a
+      new ``as_of`` (new inputs or another city included) still
+      compiles the 14 classes that read it and reuses the other 158.
+      The conf pays only while a session runs more than one cycle.
+    - ``spark.sql.codegen.useIdInClassName`` off: the cache is keyed
+      by the generated source, and by default each class name carries
+      its whole-stage codegen id. Under AQE the same stage can get
+      another id from one run to the next, so an unchanged stage
+      missed the cache at random and compiled again.
     """
     n = str(cpus or _DEF_CPUS)
     # allocator env for the JVM we are about to launch (and thus the
@@ -55,6 +65,7 @@ def get_spark(app_name: str = "trendr-spark", cpus: str | int | None = None) -> 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
