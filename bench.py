@@ -20,12 +20,11 @@ HARNESS — fixture staging plus synchronous memory-sink micro-batches
 — not the operator, and vary ~2× run to run (r4 verdict item 10).
 They are tagged in ``harness_queries`` and the JSON carries a second
 total, ``operator_total``, that excludes them so round-over-round
-totals compare like with like. c38 (the composed release-cycle gate)
-left the tag in r10: its v1-index staging now runs ONCE per process
-(first rep) and every rep runs the cycle against a hardlink clone,
-so the per-query MEDIAN is the cycle's true operator cost; the
-one-time staging seconds are recorded separately under ``staging_s``
-(r9 verdict item 2 — the staging/cycle split as a published number).
+totals compare like with like. Gates that stage an artifact once per
+process (c53, c54) pay it in the first rep, so the per-query MEDIAN is
+the operator's cost; the one-time staging seconds are recorded
+separately under ``staging_s`` (r9 verdict item 2 — the staging/cycle
+split as a published number).
 
 The JSON also carries ``renames``: the name map this round's cap
 rotation applied (old → new), so round-over-round comparisons join on
@@ -176,7 +175,8 @@ REGISTRY_V1_FROZEN = (
 # r9 z-push records ONLY (frozen name → "z"+name, admitting a same-round
 # NEW gate into the window). Never a substantive rename again.
 RENAMES_R9: dict[str, str] = {
-    # admits c38_release_cycle (the composed incremental release gate)
+    # admitted c38_release_cycle (the composed incremental release
+    # gate, since removed — REMOVED_GATES)
     "s06_ttl_due_filter": "zs06_ttl_due_filter",
     # admits c39_exact_substring_runs (ExactSubstr maximal runs)
     "s04_haversine_bands": "zs04_haversine_bands",
@@ -251,6 +251,16 @@ RENAMES_R13: dict[str, str] = {
 RENAMES = {
     **RENAMES_R9, **RENAMES_R10, **RENAMES_R11, **RENAMES_R12, **RENAMES_R13,
 }
+
+#: gates that a z-push record above admitted and a declared feature
+#: removal later deleted. The pushed names keep their z-names, so the
+#: records stay, and the freeze test counts these gates against them.
+#: c51 and c57 are not listed: the records that admitted c53 and c56
+#: left with p07 and p05, which balances them.
+REMOVED_GATES = (
+    # deleted with the persisted MinHash index it refreshed
+    "c38_release_cycle",
+)
 
 #: bench-only legs — z-named PAST the driver window at creation,
 #: deliberately oracle-less: approximate by design (zc42, its
@@ -367,13 +377,11 @@ def main() -> None:
         )
     )
     # one-time staging work (absorbed by the first rep, excluded from
-    # the medians) — the staging/operator split, published: c38's
-    # v1-index stage and c53's day-partitioned events stage
-    from trendr_data_pipeline_spark.plans import layout_ops, release_ops
+    # the medians) — the staging/operator split, published: c53's
+    # day-partitioned events stage and c54's co-bucketed tables
+    from trendr_data_pipeline_spark.plans import layout_ops
 
     staging_s = {}
-    if release_ops.STAGING_SECONDS:
-        staging_s["c38"] = round(sum(release_ops.STAGING_SECONDS.values()), 3)
     # layout_ops stages two artifacts: c53's day-partitioned events
     # (plain-path keys) and c54's co-bucketed tables ("c54:"-prefixed)
     c53_s = sum(

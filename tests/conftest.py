@@ -21,7 +21,7 @@ sys.path.insert(0, str(REPO))
 # bucket, merge sinks, nightly-ops recipe, interval-join property and
 # the determinism of c05/c58/c61/c62) are not in the set: they run by
 # default. The default set keeps every oracle-gate param and a
-# determinism pin for 102 of the 108 registered queries.
+# determinism pin for 101 of the 107 registered queries.
 # Entries are nodeid fragments: "file::test" marks the whole function
 # (all params); "file::test[param]" marks one param.
 # ---------------------------------------------------------------------------
@@ -35,7 +35,6 @@ SLOW_CALLS = {
     "test_dedup_similarity.py::test_jaccard_df_cap_safety_check",
     "test_dedup_similarity.py::test_maximal_runs_property_random_corpora",
     # double-run determinism: only the heavy corpus queries
-    "test_determinism.py::test_query_is_deterministic[c38_release_cycle]",
     "test_determinism.py::test_query_is_deterministic[c40_data_card]",
     "test_determinism.py::test_query_is_deterministic[x16_quality_classifier]",
     "test_determinism.py::test_query_is_deterministic[x21_semantic_dedup]",
@@ -46,19 +45,6 @@ SLOW_CALLS = {
     # graph algorithm equivalence sweeps
     "test_graph.py::test_shapes_both_algorithms",
     "test_graph.py::test_property_random_graphs",
-    # ANN index lifecycle pins (build/extend/remove/compact round-trips)
-    "test_index_store.py::test_ivf_extend_sink_streaming_replay_safe",
-    "test_index_store.py::test_compact_index_reduces_files_and_preserves_results",
-    "test_index_store.py::test_index_remove_sink_streaming_takedowns",
-    "test_index_store.py::test_ivf_index_roundtrip_identical",
-    "test_index_store.py::test_filtered_search_on_persisted_indexes",
-    "test_index_store.py::test_pq_index_roundtrip_identical",
-    "test_index_store.py::test_extend_pq_index_codes_and_retrieval",
-    "test_index_store.py::test_extend_ivfpq_index_new_vectors_findable",
-    "test_index_store.py::test_remove_all_ids_leaves_searchable_empty_index",
-    "test_index_store.py::test_index_rebuild_is_atomic",
-    "test_index_store.py::test_pq_index_warm_query_skips_training",
-    "test_index_store.py::test_extend_heals_crash_residue",
     # packing/property sweeps
     "test_packing.py::test_spfhp_assignments_random_vs_reference",
     "test_packing.py::test_global_offsets_property_random_frames",
@@ -67,7 +53,6 @@ SLOW_CALLS = {
     "test_property_text.py::test_quantize_engine_parity_random_vectors",
     "test_property_text.py::test_normalize_property",
     "test_quality.py::test_property_token_streams",
-    "test_release.py::test_release_cycle_converges_index_and_replays",
     "test_text_selection.py::test_bm25_capped_leg_recall_and_error_bound",
     "test_text_selection.py::test_incremental_data_card_converges_and_noop",
     "test_text_selection.py::test_bm25_df_cap_prunes_hot_terms_exactly",
@@ -82,25 +67,9 @@ SLOW_CALLS = {
     "test_dedup_similarity.py::test_ivfpq_production_recall_and_determinism",
     "test_dedup_similarity.py::test_ngram_contamination_flags",
     "test_dedup_similarity.py::test_containment_pairs_df_cap_equivalence",
-    "test_text_index.py::test_remove_sink_streaming_takedowns",
-    "test_text_index.py::test_apply_snapshot_diff_refreshes_index_incrementally",
-    "test_text_index.py::test_remove_prunes_files_and_matches_fresh_build",
-    "test_text_index.py::test_streaming_sink_ingests_waves_replay_safe",
     "test_property_text.py::test_word_ngram_hash_flags_match_string_flags",
     "test_property_text.py::test_dedupe_key_property",
-    "test_index_store.py::test_remove_from_index_null_or_bad_id_raises",
-    "test_index_store.py::test_streaming_extend_then_compact_then_resume",
-    "test_index_store.py::test_ivfpq_index_roundtrip_identical",
-    "test_index_store.py::test_remove_composes_with_extend_and_compact",
-    "test_index_store.py::test_ivfpq_extend_sink_streaming",
-    "test_index_store.py::test_filtered_search_composes_with_lifecycle",
-    "test_index_store.py::test_index_kind_mismatch_fails_loudly",
-    "test_index_store.py::test_extend_heals_died_mid_swap",
-    "test_index_store.py::test_extend_ivf_index_adds_without_rewrite",
-    "test_index_store.py::test_extend_ivf_index_rejects_wrong_kind",
-    "test_index_store.py::test_compact_drops_crc_sidecars",
     "test_text_selection.py::test_data_card_null_and_literal_all_source_parity",
-    "test_release.py::test_diff_and_release_oracles_null_content_parity",
     "test_packing.py::test_chunk_documents_is_streaming_compatible",
 }
 

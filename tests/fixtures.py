@@ -13,6 +13,21 @@ CATEGORIES = ["restaurant", "bar", "cafe", "bakery", "night_club"]
 SOURCE_TYPES = ["guide", "press", "local", "blog", None]
 CITIES = ["paris", "lyon", "marseille"]
 
+#: scanned places, the ``pipeline.ingest_places`` input: pl1 is a new
+#: unrated venue, pl2 a well-rated one, pl3 a weak one, pl4 has a type
+#: outside the allowlist and pl5 has no name
+PLACES = [
+    ("pl1", "New Cafe Terrasse", ["cafe"], None, None, 48.86, 2.33, "5 rue X, Paris"),
+    ("pl2", "Old Steakhouse", ["restaurant"], 4.6, 900, 48.86, 2.33, "6 rue X, Paris"),
+    ("pl3", "Mediocre Spot", ["restaurant"], 3.5, 10, 48.86, 2.33, "7 rue X, Paris"),
+    ("pl4", "Gym Palace", ["gym"], 4.9, 1000, 48.86, 2.33, "8 rue X, Paris"),
+    ("pl5", None, ["bar"], 4.8, 100, 48.86, 2.33, "9 rue X, Paris"),
+]
+PLACES_SCHEMA = (
+    "place_id string, name string, types array<string>, rating double,"
+    " reviews_count long, lat double, lng double, address string"
+)
+
 
 def make_domain_fixtures(n_pois: int = 60):
     rng = random.Random(42)

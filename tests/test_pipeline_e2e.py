@@ -11,7 +11,7 @@ from urllib.parse import urlparse
 import pytest
 from pyspark.sql import functions as F
 
-from tests.fixtures import AS_OF, make_domain_fixtures
+from tests.fixtures import AS_OF, PLACES, PLACES_SCHEMA, make_domain_fixtures
 from tests.test_mentions import CANDIDATES, CATALOG, PROFILES
 from trendr_data_pipeline_spark import pipeline as P
 from trendr_data_pipeline_spark.schemas import DOMAIN
@@ -150,17 +150,7 @@ def test_collections_stage(result):
 
 
 def test_ingest_places(spark):
-    places = spark.createDataFrame(
-        [
-            ("pl1", "New Cafe Terrasse", ["cafe"], None, None, 48.86, 2.33, "5 rue X, Paris"),
-            ("pl2", "Old Steakhouse", ["restaurant"], 4.6, 900, 48.86, 2.33, "6 rue X, Paris"),
-            ("pl3", "Mediocre Spot", ["restaurant"], 3.5, 10, 48.86, 2.33, "7 rue X, Paris"),
-            ("pl4", "Gym Palace", ["gym"], 4.9, 1000, 48.86, 2.33, "8 rue X, Paris"),
-            ("pl5", None, ["bar"], 4.8, 100, 48.86, 2.33, "9 rue X, Paris"),
-        ],
-        "place_id string, name string, types array<string>, rating double,"
-        " reviews_count long, lat double, lng double, address string",
-    )
+    places = spark.createDataFrame(PLACES, PLACES_SCHEMA)
     # pl3 is already known — its 'unseen' novelty factor (0.3) drops
     # and it fails both the novelty and quality gates
     existing = spark.createDataFrame([("pl3",)], "place_id string")
@@ -235,6 +225,20 @@ def test_unwritten_result_is_released(spark, inputs):
         next(fixture)  # teardown
     assert _persistent_rdd_ids(spark) <= before and not res.boundaries
     res.release()
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def test_failed_cycle_releases_its_boundaries(spark, inputs, monkeypatch):
+    """A stage that raises after both boundaries are materialized
+    (collections is the last one) leaves nothing persisted."""
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("collections failed")
+
+    monkeypatch.setattr(P, "top_k_collection", boom)
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="collections failed"):
+        P.run_auto_pipeline(*inputs)
     assert _persistent_rdd_ids(spark) <= before
 
 

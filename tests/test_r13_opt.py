@@ -13,8 +13,6 @@ from __future__ import annotations
 import subprocess
 import sys
 
-from pyspark.sql import functions as F
-
 
 def test_malloctune_applied_at_package_import():
     out = subprocess.run(
@@ -48,41 +46,6 @@ def test_malloctune_opt_out_via_env():
         check=True,
     )
     assert out.stdout.strip() == "False False"
-
-
-def test_apply_empty_snapshot_diff_is_true_noop(spark, tmp_path):
-    """r13: the single-swap combined refresh must keep both old verbs'
-    no-op contract — an empty diff publishes nothing (no swap, same
-    inodes), so a cron cycle over an unchanged corpus never rewrites
-    the artifact."""
-    import os
-
-    from trendr_data_pipeline_spark.io import read_table
-    from trendr_data_pipeline_spark.operators.ingestion import snapshot_diff
-    from trendr_data_pipeline_spark.operators.text_index import (
-        apply_snapshot_diff_to_index,
-        write_minhash_index,
-    )
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    idx = str(tmp_path / "idx")
-    write_minhash_index(docs, idx)
-
-    def inodes(root):
-        out = {}
-        for r, _d, fs in os.walk(root):
-            for f in fs:
-                p = os.path.join(r, f)
-                out[os.path.relpath(p, root)] = os.stat(p).st_ino
-        return out
-
-    before = inodes(idx)
-    d = snapshot_diff(docs, docs, id_col="doc_id", content_col="text")
-    assert d.count() == 0
-    apply_snapshot_diff_to_index(d, docs, idx)
-    assert inodes(idx) == before
 
 
 def test_replay_waves_restores_session_confs(spark):

@@ -1189,7 +1189,8 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
     18:00 cadence (monitoring_system.py:63-71) against a tmp-dir
     lake, through two simulated days including a missed slot:
 
-    - 02:00 ``compact_minhash_index`` (text-index small-file upkeep);
+    - 02:00 place ingestion (``pipeline.ingest_places`` over the
+      scan's staged places parquet, idempotent overwrite);
     - 14:00 partitioned-merge maintenance (an AvailableNow drive of
       the bucketed MERGE sink over the staged wave dir, resuming the
       SAME checkpoint each night);
@@ -1199,29 +1200,29 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
     Asserts: the first tick runs everything (startup rule), each slot
     fires exactly once (re-ticks are no-ops), the missed 18:00 slot
     catches up ONCE hours later, and after two days the lake is
-    CORRECT — compacted index probes equal a fresh build, the merge
-    target reflects the latest wave, the rollup equals the batch
-    truth."""
+    CORRECT — the ingested places equal a batch ingest of every
+    staged place, the merge target reflects the latest wave, the
+    rollup equals the batch truth."""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
+    from tests.fixtures import PLACES, PLACES_SCHEMA
     from trendr_data_pipeline_spark.io import read_table
-    from trendr_data_pipeline_spark.operators.text_index import (
-        compact_minhash_index,
-        extend_minhash_index,
-        minhash_probe,
-        write_minhash_index,
-    )
+    from trendr_data_pipeline_spark.pipeline import ingest_places
     from trendr_data_pipeline_spark.streaming.cadence import CadenceJob, run_due_jobs
     from trendr_data_pipeline_spark.streaming.jobs import (
         partitioned_merge_sink,
         read_merge_target,
     )
 
-    docs = read_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
-    idx = str(tmp_path / "mh_idx")
-    write_minhash_index(docs.filter(F.col("doc_id") % 3 == 0), idx)
+    places_dir = str(tmp_path / "places")
+    ingested_out = str(tmp_path / "ingested")
+
+    def stage_places(rows):
+        spark.createDataFrame(rows, PLACES_SCHEMA).write.mode("append").parquet(places_dir)
+
+    stage_places(PLACES[2:])
 
     waves = _wave_dir(tmp_path)
     target = str(tmp_path / "tbl")
@@ -1232,11 +1233,18 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
     t0 = dt.datetime(2025, 3, 1)
     _write_wave(spark, waves, 1, [(f"k{i}", t0, float(i)) for i in range(30)])
 
-    runs = {"compact": 0, "merge": 0, "quota": 0}
+    runs = {"ingest": 0, "merge": 0, "quota": 0}
 
-    def compact_job():
-        runs["compact"] += 1
-        compact_minhash_index(idx, max_files_per_group=2)
+    def ingest_job():
+        runs["ingest"] += 1
+        (
+            ingest_places(spark.read.parquet(places_dir))
+            .write.mode("overwrite")
+            .parquet(ingested_out)
+        )
+
+    def ingested_ids():
+        return {r["place_id"] for r in spark.read.parquet(ingested_out).collect()}
 
     def merge_job():
         runs["merge"] += 1
@@ -1266,7 +1274,7 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
         )
 
     jobs = [
-        CadenceJob("nightly_compact", compact_job, daily_at="02:00"),
+        CadenceJob("nightly_ingest", ingest_job, daily_at="02:00"),
         CadenceJob("merge_maintenance", merge_job, daily_at="14:00"),
         CadenceJob("quota_rollup", quota_job, daily_at="18:00"),
     ]
@@ -1276,11 +1284,12 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
         return run_due_jobs(jobs, state, now=day.replace(hour=hh, minute=mm))
 
     # first tick: never-ran startup → everything fires once
-    assert tick(1, 0) == ["nightly_compact", "merge_maintenance", "quota_rollup"]
-    # grow the index so the 02:00 compaction has real work
-    for rem in (1, 2):
-        extend_minhash_index(docs.filter(F.col("doc_id") % 3 == rem), idx)
-    assert tick(2, 5) == ["nightly_compact"]
+    assert tick(1, 0) == ["nightly_ingest", "merge_maintenance", "quota_rollup"]
+    assert ingested_ids().isdisjoint({"pl1", "pl2"})
+    # the scan stages new places, so the 02:00 ingest has real work
+    stage_places(PLACES[:2])
+    assert tick(2, 5) == ["nightly_ingest"]
+    assert {"pl1", "pl2"} <= ingested_ids()
     assert tick(2, 6) == []  # re-tick inside the slot: no-op
     # stage tonight's upsert wave, then the 14:00 maintenance applies it
     _write_wave(spark, waves, 2, [("k7", t0 + dt.timedelta(days=1), 777.0)])
@@ -1293,16 +1302,16 @@ def test_nightly_ops_recipe_two_days_with_missed_slot(spark, tmp_path):
     assert tick(23, 0) == []
     # ---- day 2 ----
     day2 = day1 + dt.timedelta(days=1)
-    assert tick(2, 1, day2) == ["nightly_compact"]
+    assert tick(2, 1, day2) == ["nightly_ingest"]
     assert tick(2, 2, day2) == []
-    assert runs == {"compact": 3, "merge": 2, "quota": 2}
-    # lake correctness after the cycle: compacted index == fresh build
-    fresh = str(tmp_path / "fresh")
-    write_minhash_index(docs, fresh)
-    probes = docs.filter(F.col("doc_id") % 10 == 0)
-    got_p = sorted(tuple(r) for r in minhash_probe(probes, idx, threshold=0.8).collect())
-    want_p = sorted(tuple(r) for r in minhash_probe(probes, fresh, threshold=0.8).collect())
-    assert got_p == want_p and got_p
+    assert runs == {"ingest": 3, "merge": 2, "quota": 2}
+    # lake correctness after the cycle: the ingested places equal a
+    # batch ingest of every staged place
+    want_i = sorted(
+        tuple(r) for r in ingest_places(spark.createDataFrame(PLACES, PLACES_SCHEMA)).collect()
+    )
+    got_i = sorted(tuple(r) for r in spark.read.parquet(ingested_out).collect())
+    assert got_i == want_i and got_i
     # rollup equals the batch truth
     want_q = {
         (r["day"], r["event_type"]): (r["n_events"], r["total_value"])

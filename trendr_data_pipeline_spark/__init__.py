@@ -3,7 +3,9 @@
 A from-scratch, idiomatic-Spark re-expression of the query and
 data-processing capabilities of the trendr.data-pipeline reference
 (POI trend-discovery ETL), plus corpus/LLM-training-data operators
-(dedup, similarity search, text analysis) that no POI path calls.
+(dedup, in-query similarity search, text analysis) that no POI path
+calls. The only published-directory swap is the refresh sink's
+per-bucket swap (``streaming/jobs``).
 
 Package map
 -----------

@@ -16,10 +16,9 @@ Corpus/LLM-data operators (no POI caller):
 
 - ``dedup``       : exact, prefix-filtered Jaccard, MinHash-LSH, SimHash
 - ``graph``       : connected components over near-dup pairs
-- ``similarity``  : embedding cosine top-k (brute-force, LSH, IVF, PQ)
-- ``index_store`` : persisted ANN indexes
-- ``text_index``  : persisted MinHash-LSH text index
+- ``similarity``  : embedding cosine top-k (brute-force, LSH, IVF, PQ),
+  trained and searched within one query; no index is persisted
 - ``quality``, ``quality_model`` : document quality metrics and model
-- ``sampling``, ``packing``, ``vectorize``, ``release`` : mixture
-  sampling, sequence packing, feature hashing, release cycle
+- ``sampling``, ``packing``, ``vectorize`` : mixture sampling,
+  sequence packing, feature hashing
 """

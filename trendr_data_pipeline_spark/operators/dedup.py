@@ -624,19 +624,6 @@ def containment_pairs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature_expr(toks: Column, n_hashes: int = 128) -> Column:
-    """Array of n MinHash values via higher-order builtins (xxhash64
-    per (token, seed)). Fully JVM-side but NOT codegen'd — Spark
-    evaluates lambda functions interpretively, ~2.5 ms/row at 128
-    hashes × 25 tokens. Kept for reference; the UDF form below is the
-    production path."""
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    return F.transform(
-        seeds,
-        lambda s: F.array_min(F.transform(toks, lambda t: F.xxhash64(t, s))),
-    )
-
-
 def _affine_constants(n_hashes: int):
     """Deterministic odd multipliers / offsets for the affine MinHash
     family, derived from sha256 (stable across platforms and runs)."""
@@ -692,27 +679,6 @@ def _minhash_mins(chunk, a, b):
 #: rows per reduceat chunk — bounds the (tokens × n_hashes) uint64
 #: intermediate to a few tens of MB regardless of Arrow batch size
 _MINHASH_CHUNK = 2048
-
-
-def minhash_signature(toks: Column, n_hashes: int = 128) -> Column:
-    """Array of n MinHash values, vectorized: each distinct token is
-    hashed once (blake2b-64), then the n affine permutations
-    ``(a_i·h + b_i) mod 2⁶⁴`` are evaluated as one flat outer product
-    per Arrow chunk and segment-min-reduced per document (~25× faster
-    than the expression form; the reduceat form removes the remaining
-    per-row Python loop)."""
-    import numpy as np
-
-    a, b = _affine_constants(n_hashes)
-
-    def batch(s: pd.Series) -> pd.Series:
-        out = []
-        for start in range(0, len(s), _MINHASH_CHUNK):
-            mins = _minhash_mins(s.iloc[start : start + _MINHASH_CHUNK], a, b)
-            out.extend(mins.astype(np.int64))
-        return pd.Series(out)
-
-    return F.pandas_udf(batch, "array<long>")(toks)
 
 
 def minhash_band_buckets(toks: Column, n_hashes: int = 128, bands: int = 32) -> Column:

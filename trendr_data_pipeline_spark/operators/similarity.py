@@ -97,26 +97,6 @@ def _hyperplane(dim: int, j: int, seed: int) -> list[float]:
     return out
 
 
-def hyperplane_sketch(vec: Column, dim: int, bits: int, seed: int) -> Column:
-    """Sign-bit sketch: bit j = sign(vec · hyperplane_j). The planes
-    are literal arrays; per row the work is `bits` fused
-    zip_with/aggregate dot products — all codegen, no hashing."""
-
-    def bit(j: int) -> Column:
-        plane = F.array(*[F.lit(w) for w in _hyperplane(dim, j, seed)])
-        s = F.aggregate(
-            F.zip_with(vec, plane, lambda v, w: v.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(s >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    out = F.lit(0)
-    for j in range(bits):
-        out = out * 2 + bit(j)
-    return out
-
-
 def _spherical_kmeans(X, nlist: int, seed: int, iters: int = 10):
     """Driver-side spherical k-means (cosine Lloyd) over a sample
     matrix — deterministic for a given sample + seed. Returns the
@@ -221,10 +201,8 @@ def _ivf_search(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Probe + exact-rescore half of IVF, shared by the
-    train-and-query path (:func:`ivf_topk`) and the persisted-index
-    path (:func:`ivf_topk_index`). ``assigned`` is the
-    (neighbor_id, cv, cell) frame."""
+    """Probe + exact-rescore half of :func:`ivf_topk`. ``assigned``
+    is the (neighbor_id, cv, cell) frame."""
     probe_udf = _nearest_cells(centroids, nprobe=nprobe)
     probes = queries.select(
         F.col(id_col).alias("query_id"),
@@ -791,23 +769,16 @@ def _pq_adc_rescore(
     vec_col: str,
     probe_centroids=None,
     nprobe: int = 0,
-    qrows=None,
     residual: bool = False,
 ) -> DataFrame:
     """ADC scan + candidate shuffle + exact rescore half of PQ,
-    shared by the train-and-query path (:func:`pq_topk`), the
-    persisted-index path (:func:`pq_topk_index`) and the IVFPQ paths.
+    shared by :func:`pq_topk` and :func:`ivfpq_topk`.
 
     With ``probe_centroids``/``nprobe`` set (the IVFPQ form),
     ``coded`` must carry a ``cell`` column and each query only scores
     neighbors whose cell is among its ``nprobe`` nearest centroids —
     the inverted-file restriction that makes the ADC scan read
-    nprobe/nlist of the corpus instead of all of it (on the persisted
-    index the restriction is ALSO a partition-pruned scan).
-    ``qrows`` optionally carries the already-collected (query_id,
-    vec) rows so a caller that needed them for its own probe-union
-    pruning (:func:`~.index_store.ivfpq_topk_index`) doesn't ship the
-    query set driver-side twice.
+    nprobe/nlist of the corpus instead of all of it.
 
     Query-side driver residency is BOUNDED (r5 verdict item 4): the
     ADC tables live on the driver and broadcast with the scan, which
@@ -819,8 +790,7 @@ def _pq_adc_rescore(
     import numpy as np
 
     m = books.shape[0]
-    if qrows is None:
-        qrows = _collect_query_rows(queries, id_col, vec_col)
+    qrows = _collect_query_rows(queries, id_col, vec_col)
     qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
     Q = np.array([r[vec_col] for r in qrows], dtype=np.float64)
     Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
@@ -950,9 +920,7 @@ def ivfpq_topk(
 
     Scale shape: the corpus is stored once as (id, cell, m int8
     codes) — 32× smaller than the vectors — and a query batch reads
-    nprobe/nlist of it; on the persisted index
-    (:func:`~.index_store.ivfpq_topk_index`) that restriction is a
-    partition-pruned scan, not a mask. Degenerate-exact gate: at
+    nprobe/nlist of it. Degenerate-exact gate: at
     ``nprobe == nlist`` with a corpus-covering sample and
     ``ksub`` ≥ distinct residual subvectors, reconstruction
     ``C_cell + decode(codes)`` is exact, so the output equals m01's

@@ -167,7 +167,8 @@ def run_auto_pipeline(
     result's ``boundaries``). The percentiles, transitions and
     collections are lazy plans over the scored POIs. The caller
     releases the result — ``write_outputs`` does — and reads nothing
-    from it afterwards."""
+    from it afterwards. If a stage raises, the boundaries already
+    made are released before the error propagates."""
     # spatial association (J1)
     associated = associate_pois(poi, urban_areas)
 
@@ -193,34 +194,41 @@ def run_auto_pipeline(
         .withColumn("match_score", F.col("name_sc"))
         .withColumn("created_at", as_of)
     )
-    deduped = _materialize(cap_accepted_per_poi(windowed_dedup(accepted, as_of), limit_per_poi))
-
-    # classification (§3.3): one-pass star join
-    mentions_for_scoring = deduped.select(
-        "poi_id", "source_type", "authority_weight", "match_score", "w_time", "created_at"
-    )
+    # every boundary made so far is released if a later stage fails
+    boundaries: list[DataFrame] = []
     try:
-        scored = _materialize(classify(associated, mentions_for_scoring, snapshots, as_of))
-    except BaseException:
-        _release(deduped)
-        raise
-    pct = score_percentiles(scored)
-    transitions = status_transitions(
-        poi.select("id", "eligibility_status"), scored
-    )
+        deduped = _materialize(
+            cap_accepted_per_poi(windowed_dedup(accepted, as_of), limit_per_poi)
+        )
+        boundaries.append(deduped)
 
-    # collections (tag engine)
-    tagged = with_effective_tags(scored)
-    per_template = None
-    for key, tpl in COLLECTION_TEMPLATES.items():
-        m = filter_by_tag_criteria(
-            tagged, tpl["required_tags"], tpl["excluded_tags"], tpl["min_confidence"]
-        ).withColumn("template", F.lit(key))
-        per_template = m if per_template is None else per_template.unionByName(m)
-    topk = top_k_collection(per_template)
-    cols = assemble_collections(
-        topk, city, {k: t["title"] for k, t in COLLECTION_TEMPLATES.items()}
-    )
+        # classification (§3.3): one-pass star join
+        mentions_for_scoring = deduped.select(
+            "poi_id", "source_type", "authority_weight", "match_score", "w_time", "created_at"
+        )
+        scored = _materialize(classify(associated, mentions_for_scoring, snapshots, as_of))
+        boundaries.append(scored)
+        pct = score_percentiles(scored)
+        transitions = status_transitions(
+            poi.select("id", "eligibility_status"), scored
+        )
+
+        # collections (tag engine)
+        tagged = with_effective_tags(scored)
+        per_template = None
+        for key, tpl in COLLECTION_TEMPLATES.items():
+            m = filter_by_tag_criteria(
+                tagged, tpl["required_tags"], tpl["excluded_tags"], tpl["min_confidence"]
+            ).withColumn("template", F.lit(key))
+            per_template = m if per_template is None else per_template.unionByName(m)
+        topk = top_k_collection(per_template)
+        cols = assemble_collections(
+            topk, city, {k: t["title"] for k, t in COLLECTION_TEMPLATES.items()}
+        )
+    except BaseException:
+        for b in boundaries:
+            _release(b)
+        raise
 
     return PipelineResult(
         poi_ingested=poi,
@@ -230,7 +238,7 @@ def run_auto_pipeline(
         score_percentiles=pct,
         status_transitions=transitions,
         collections=cols,
-        boundaries=[deduped, scored],
+        boundaries=boundaries,
     )
 
 

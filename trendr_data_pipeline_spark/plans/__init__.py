@@ -21,7 +21,6 @@ def load_all() -> None:
     from . import events_ops  # noqa: F401
     from . import scalar_ops  # noqa: F401
     from . import pipeline_ops  # noqa: F401
-    from . import release_ops  # noqa: F401
     from . import data_card  # noqa: F401
     from . import decontam_ops  # noqa: F401
     from . import layout_ops  # noqa: F401

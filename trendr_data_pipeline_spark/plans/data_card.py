@@ -36,8 +36,7 @@ from ..io import read_table
 from ._numeric import DEC, sql_davg
 from .dedup_ops import _SQL_TOKSET
 from .registry import _REGISTRY, register
-from .release_ops import SQL_SPLIT_CASE
-from .text_ops import _MARKERS, _SQL_QUALITY, _SQL_STOP, _SQL_TOKS
+from .text_ops import SQL_SPLIT_CASE, _MARKERS, _SQL_QUALITY, _SQL_STOP, _SQL_TOKS
 
 #: sampled near-dup slice (the d02 incoming predicate)
 _ND_MOD = 10
@@ -330,9 +329,8 @@ def doc_card_features(docs: DataFrame) -> DataFrame:
     of its id), which is exactly what makes the frame MAINTAINABLE
     O(delta) across releases (c44): unchanged docs keep their rows
     verbatim. The corpus-JOIN card legs (near-dup sampling,
-    contamination) deliberately live outside this frame — their
-    incremental story is the text index / release cycle (c38), not a
-    row merge."""
+    contamination) deliberately live outside this frame: they join
+    the whole corpus, so a row merge cannot maintain them."""
     from ..operators.dedup import bow_fingerprint, tokens as _tokens
     from ..operators.quality import token_entropy
     from ..operators.sampling import split_assign
@@ -438,10 +436,9 @@ def incremental_data_card(
     v2: DataFrame,
     diff: DataFrame | None = None,
 ) -> DataFrame:
-    """⊕A19 incremental (r10, verdict item 5 — the c38 device applied
-    to REPORTING, the natural final verb of the release cycle: the
-    card IS the release report): refresh the card's per-doc feature
-    frame O(delta) and re-aggregate. ``feat_v1`` is the maintained
+    """⊕A19 incremental (r10, verdict item 5 — the card IS the
+    release report): refresh the card's per-doc feature frame
+    O(delta) and re-aggregate. ``feat_v1`` is the maintained
     feature artifact for ``v1`` (:func:`doc_card_features` output,
     persisted between releases); the snapshot diff (c33) classifies
     the delta, ONLY added/modified docs are re-featurized (the
@@ -452,11 +449,11 @@ def incremental_data_card(
     ``diff`` (r11): pass the release run's own c33 snapshot diff to
     skip recomputing it — the diff is the one O(corpus) term left in
     this path (two md5 projections + a full-outer join), and a
-    production release computes it ONCE anyway (c38's cycle starts
-    with the same diff; the card piggybacks). The r11 card-mode
-    wall-time table (SCALING.md) measures both variants: with the
-    diff shared, the refresh is delta-bound as claimed; computing
-    its own diff, the ratio saturates near featurize:md5-scan.
+    production release computes it ONCE anyway (the card
+    piggybacks). The r11 card-mode wall-time table (SCALING.md)
+    measures both variants: with the diff shared, the refresh is
+    delta-bound as claimed; computing its own diff, the ratio
+    saturates near featurize:md5-scan.
     Must have c33's schema: (doc_id, status ∈ added/removed/
     modified/...).
 
@@ -504,8 +501,7 @@ register(
 
 #: staged v1 feature artifacts: abs(sf_dir) -> parquet dir (the
 #: maintained per-doc frame a production card keeps between releases;
-#: staged once per process — read-only, so no per-run clone needed,
-#: unlike c38's refreshed index)
+#: staged once per process — read-only, so no per-run clone needed)
 _STAGED_FEAT: dict[str, str] = {}
 _FEAT_CLEANUP_REGISTERED = False
 
@@ -598,10 +594,10 @@ def _incr_card_oracle() -> str:
     "c44_incremental_data_card",
     _incr_card_oracle(),
     doc="""INCREMENTAL data card across a v1→v2 release step (⊕A19
-    incremental, r10 — verdict item 5; the c38 device applied to
-    reporting): the Spark side maintains the v1 per-doc feature
-    artifact (staged once per process, read-only — in production the
-    frame a card keeps between releases), classifies the delta with
+    incremental, r10 — verdict item 5): the Spark side maintains the
+    v1 per-doc feature artifact (staged once per process, read-only —
+    in production the frame a card keeps between releases), classifies
+    the delta with
     the c33 snapshot diff, re-featurizes ONLY added/modified docs
     (the tokenize/quality/entropy pass — the card's dominant cost),
     merges, and re-aggregates with ROLLUP(split) + grouping()
@@ -611,8 +607,8 @@ def _incr_card_oracle() -> str:
     string repointed at v2) — a hash match proves incremental card ==
     full recompute. The corpus-JOIN legs (near-dup sample,
     contamination) deliberately stay out of the maintained frame:
-    their incremental story is the text index / release cycle, and
-    the full card (c40) gates them separately.""",
+    they join the whole corpus, and the full card (c40) gates them
+    separately.""",
 )
 def c44_incremental_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup_ops import v2_snapshot

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..io import read_table
 from .dedup_ops import _SQL_TOKS_DEDUP
 from .registry import register
-from .release_ops import SQL_SPLIT_CASE
+from .text_ops import SQL_SPLIT_CASE
 
 _C43_N = 8
 

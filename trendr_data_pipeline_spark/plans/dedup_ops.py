@@ -664,8 +664,8 @@ def t12_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: deterministic v2 snapshot derivation (drop %11, revise %7, re-add
-#: %13 under new ids) — shared by the c33 diff gate and the c38
-#: release-cycle gate so an edit here propagates to both oracles
+#: %13 under new ids) — shared by the c33 diff gate and the c44
+#: incremental card so an edit here propagates to both oracles
 SQL_V2_SNAPSHOT = """
         SELECT doc_id,
                CASE WHEN doc_id % 7 = 0 THEN text || ' rev' ELSE text END AS text

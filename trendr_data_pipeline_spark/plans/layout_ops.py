@@ -6,10 +6,10 @@
 dataset through a dimension-driven partition filter — the layout
 claim was pytest-narrated (tests/test_io_layout.py), not
 plan-asserted under the driver (r10 verdict item 6). This gate
-stages a day-partitioned copy of ``events`` once per process (the
-c38 stage-once device; staging seconds published in the bench JSON
-under ``staging_s``), then aggregates it through a join against a
-filtered calendar dimension. Catalyst plans DYNAMIC partition
+stages a day-partitioned copy of ``events`` once per process
+(staging seconds published in the bench JSON under ``staging_s``),
+then aggregates it through a join against a filtered calendar
+dimension. Catalyst plans DYNAMIC partition
 pruning: the dim's filter result is broadcast, and the fact scan's
 ``PartitionFilters`` carries a ``dynamicpruningexpression`` — only
 the 4 matching day-directories of 30 are read at runtime.

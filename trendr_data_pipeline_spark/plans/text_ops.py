@@ -943,8 +943,7 @@ def zipf_synthetic_docs(
     over [1, vocab] via an md5 hash of (salt, doc, slot):
     P(rank ≤ r) = ln r / ln vocab ⇒ rank density ∝ 1/r, the Zipf
     s=1 df profile. Pure JVM expressions — no driver loop, no
-    fixture writes, same device as tools/text_index_bench.py's
-    hash-unique corpus."""
+    fixture writes."""
     u = lambda j: (  # noqa: E731
         F.conv(
             F.substring(
@@ -1685,6 +1684,21 @@ def t10_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_log_weights(
         read_table(spark, sf_dir, "documents"), target=F.col("lang") == "en", dim=64
     )
+
+
+#: md5 hash-fraction (c34's split device) over a given id expression
+_HF = "(('0x' || substr(md5('{salt}' || CAST({id} AS VARCHAR)), 1, 8))::BIGINT)"
+
+#: c34's split CASE, single SQL home (shared with the c40 data card —
+#: review finding: two hand-kept copies of the split cuts would let
+#: the gates disagree about split membership with no test linking them)
+SQL_SPLIT_CASE = f"""CASE
+             WHEN {_HF.format(salt="split", id="doc_id")} / 4294967296.0 < 0.8
+                 THEN 'train'
+             WHEN {_HF.format(salt="split", id="doc_id")} / 4294967296.0 < 0.9
+                 THEN 'val'
+             ELSE 'test'
+           END"""
 
 
 @register(

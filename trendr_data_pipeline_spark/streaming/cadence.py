@@ -27,8 +27,9 @@ are no-ops, which is what makes at-least-once cron delivery safe.
 
 The documented NIGHTLY-OPS RECIPE (r9) wires this to the real
 maintenance jobs on the reference's 02:00/14:00/18:00 cadence
-(monitoring_system.py:63-71): text-index compaction
-(``compact_minhash_index``), partitioned-merge maintenance (an
+(monitoring_system.py:63-71): place ingestion
+(``pipeline.ingest_places`` over the scan's staged places),
+partitioned-merge maintenance (an
 AvailableNow drive of the bucketed MERGE sink resuming its
 checkpoint), and the A14 quota rollup (idempotent overwrite) —
 exercised end-to-end through two simulated days including a missed
