@@ -1,6 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship query on sf0.001;
+``entry(spark)`` runs the POI spatial association query
+(``c55_spatial_association``, the pipeline's third stage) on sf0.001;
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 with its DuckDB oracle (see
 ``trendr_data_pipeline_spark/plans/``).
@@ -62,11 +63,12 @@ def _ensure_shipped(spark: SparkSession) -> None:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from trendr_data_pipeline_spark.plans.relational import q02_revenue_by_region
+    """POI spatial association (c55) on /root/testdata/sf0.001; driver
+    checks rows>0."""
+    from trendr_data_pipeline_spark.plans.spatial_ops import c55_spatial_association
 
     _ensure_shipped(spark)
-    return q02_revenue_by_region(spark, SMOKE_SF_DIR)
+    return c55_spatial_association(spark, SMOKE_SF_DIR)
 
 
 def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:

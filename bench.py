@@ -262,6 +262,22 @@ REMOVED_GATES = (
     "c38_release_cycle",
 )
 
+#: expected names (frozen, or the z-name a push record gave them) that
+#: a declared feature removal deleted. The freeze and push records
+#: above stay as history; the freeze test subtracts these names and
+#: checks that none is registered.
+REMOVED_NAMES = (
+    # the TPC-H suite (plans/relational, plans/analytics) and x01, a
+    # second composition of the mention stage over TPC-H orders
+    "x01_mention_pipeline",
+    "za01_pivot_priority_counts", "za02_cube_region_segment",
+    "za03_status_share_by_nation", "za04_grouping_sets",
+    "zq01_pricing_summary", "zq02_revenue_by_region",
+    "zq03_top_customers_per_nation", "zq04_returned_orders_by_priority",
+    "zq05_customers_without_orders", "zq06_rollup_region_nation",
+    "zq07_distinct_counts", "zq08_set_ops_customers", "zq09_filtered_scan",
+)
+
 #: bench-only legs — z-named PAST the driver window at creation,
 #: deliberately oracle-less: approximate by design (zc42, its
 #: exactness pytest-pinned against the exact c42 gate), or a

@@ -21,7 +21,7 @@ sys.path.insert(0, str(REPO))
 # bucket, merge sinks, nightly-ops recipe, interval-join property and
 # the determinism of c05/c58/c61/c62) are not in the set: they run by
 # default. The default set keeps every oracle-gate param and a
-# determinism pin for 101 of the 107 registered queries.
+# determinism pin for 87 of the 93 registered queries.
 # Entries are nodeid fragments: "file::test" marks the whole function
 # (all params); "file::test[param]" marks one param.
 # ---------------------------------------------------------------------------

@@ -34,27 +34,18 @@ def test_query_matches_oracle(spark, duck, name, fn, oracle):
 
 
 def test_entry_smoke(spark):
+    """The driver checks entry() for rows > 0; entry() is the
+    c55_spatial_association query on the smoke SF."""
     import __spark_entry__ as e
 
     df = e.entry(spark)
-    assert df.count() >= 0
-    assert df.columns
-
-
-def test_approx_count_distinct_bound(spark):
-    """⊕A17 approx path: approx_count_distinct stays within the
-    documented rsd of the exact count (the 100 TB fast path the
-    oracle-checked q07 pins exactly)."""
-    from pyspark.sql import functions as F
-
-    from trendr_data_pipeline_spark.io import read_table
-
-    orders = read_table(spark, SMOKE_SF, "orders")
-    row = orders.agg(
-        F.countDistinct("o_custkey").alias("exact"),
-        F.approx_count_distinct("o_custkey", rsd=0.02).alias("approx"),
-    ).first()
-    assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.1
+    rows = [tuple(r) for r in df.collect()]
+    assert len(rows) > 0
+    c55 = e.queries()["c55_spatial_association"](spark, SMOKE_SF)
+    assert df.columns == c55.columns
+    assert value_hash(df.columns, rows) == value_hash(
+        c55.columns, [tuple(r) for r in c55.collect()]
+    )
 
 
 def test_approx_percentile_bound(spark):
@@ -178,6 +169,12 @@ def test_registry_v1_name_freeze():
         assert old in frozen, f"z-push of a non-frozen name: {old}"
         assert new == "z" + old, f"substantive rename forbidden: {old} -> {new}"
     expected = (frozen - set(renames)) | set(renames.values())
+    # names deleted with their feature leave the expected set, and
+    # must really be gone (bench.REMOVED_NAMES)
+    removed_names = set(bench.REMOVED_NAMES)
+    assert removed_names <= expected, sorted(removed_names - expected)
+    assert not removed_names & names, sorted(removed_names & names)
+    expected -= removed_names
     assert expected <= names, f"frozen names missing: {sorted(expected - names)}"
     # bench-only fast legs (r10): z-named PAST the window at creation,
     # deliberately oracle-less — approximate variants whose exactness

@@ -1,4 +1,4 @@
-"""Skew salting + bucketed co-located joins — result equality and
+"""AQE skew handling + bucketed co-located joins — result equality and
 plan-level evidence (the exchange really disappears)."""
 
 from __future__ import annotations
@@ -7,42 +7,13 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from trendr_data_pipeline_spark.operators.skew import salted_join, write_bucketed
+from trendr_data_pipeline_spark.operators.skew import write_bucketed
 
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def test_salted_join_equals_plain_join(spark):
-    """90%-hot-key join: salted results == unsalted results exactly."""
-    n = 5000
-    big = spark.range(n).select(
-        F.when(F.col("id") % 10 < 9, 1).otherwise(F.col("id") % 7).alias("k"),
-        F.col("id").alias("row_id"),
-    )
-    small = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(7)] + [(1, "dup")], "k long, label string"
-    )
-    got = salted_join(big, small, on="k", salts=8).select("row_id", "k", "label")
-    want = big.join(small, "k").select("row_id", "k", "label")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # the shuffle key really carries the salt: partitioning covers k AND _salt
-    plan = _plan(salted_join(big, small, on="k", salts=8))
-    assert "_salt" in plan
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = spark.createDataFrame([(1, 10), (2, 20), (99, 30)], "k long, v long")
-    small = spark.createDataFrame([(1, "a"), (2, "b")], "k long, label string")
-    got = {
-        (r["k"], r["v"], r["label"])
-        for r in salted_join(big, small, on="k", salts=4, how="left").collect()
-    }
-    assert got == {(1, 10, "a"), (2, 20, "b"), (99, 30, None)}
 
 
 def test_bucketed_join_runs_without_exchange(spark, tmp_path):
@@ -79,12 +50,11 @@ def test_bucketed_join_runs_without_exchange(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r13 — mechanical per-round pins (r12 verdict item 4): AQE skew-join
-# ACTIVATION on the executed plan, and the salted shard ceiling, both
-# on a planted 30%-hot-key power-law fact. tools/plan_audit.py runs
-# the same probe shape each round and treats skewJoin=0 as a
-# violation, so a Spark upgrade or conf drift that silently disables
-# the skew path fails the round.
+# r13 — mechanical per-round pin (r12 verdict item 4): AQE skew-join
+# ACTIVATION on the executed plan, on a planted 30%-hot-key power-law
+# fact. tools/plan_audit.py runs the same probe shape each round and
+# treats skewJoin=0 as a violation, so a Spark upgrade or conf drift
+# that silently disables the skew path fails the round.
 # ---------------------------------------------------------------------------
 
 import pytest
@@ -146,31 +116,3 @@ def test_aqe_skew_join_activates(spark, skew_confs):
     assert len(j.collect()) == _N_FACT
     plan = j._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "skew=true" in plan, plan[:2000]
-
-
-def test_salted_join_matches_unsalted_and_caps_shards(spark):
-    """salted_join == plain join row-for-row, AND the hot key's rows
-    spread across salts so the largest (key, salt) reducer shard is a
-    fraction of the unsalted hot partition. The salt is content-
-    derived (xxhash64 over the full row), so distinct hot-key rows
-    spread ~uniformly; ≤ 1/4 of the hot count at salts=16 is a
-    conservative bound (expected ~1/16)."""
-    fact = _skewed_fact(spark)
-    dim = _dim(spark)
-    salts = 16
-
-    plain = {tuple(r) for r in fact.join(dim, "k", "inner").collect()}
-    salted = {tuple(r) for r in salted_join(fact, dim, "k", salts=salts).collect()}
-    assert salted == plain
-
-    salt = F.pmod(F.xxhash64(F.struct(*[F.col(c) for c in fact.columns])), F.lit(salts))
-    hot_max = fact.groupBy("k").count().agg(F.max("count")).first()[0]
-    shard_max = (
-        fact.withColumn("_salt", salt)
-        .groupBy("k", "_salt")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert hot_max >= int(0.3 * _N_FACT)  # the planted skew is real
-    assert shard_max <= hot_max / 4, (shard_max, hot_max)

@@ -24,7 +24,7 @@ def test_bench_diff_loads_driver_envelope(tmp_path):
         "rc": 0,
         "tail": "…",
         "parsed": {
-            "queries": {"c05": 4.09, "q01": 1.5, "nope": 0.2},
+            "queries": {"c05": 4.09, "r01": 1.5, "nope": 0.2},
             "zpushed": 17,
         },
     }
@@ -35,7 +35,7 @@ def test_bench_diff_loads_driver_envelope(tmp_path):
     # prefix known to the current registry resolves directly
     assert q["c05_streaming_interval_join"] == 4.09
     # old prefix whose name was z-pushed resolves through the freeze rule
-    assert q["zq01_pricing_summary"] == 1.5
+    assert q["zr01_classifier_scores"] == 1.5
     # unknown prefix survives verbatim rather than crashing the join
     assert q["nope"] == 0.2
 
@@ -66,7 +66,7 @@ def test_bench_diff_loads_r13_compact_schema(tmp_path):
         "parsed": {
             "metric": "total_query_wall_time",
             "value": 170.0,
-            "q_cs": {"c05": 411, "q01": 150},
+            "q_cs": {"c05": 411, "r01": 150},
             "op_total": 150.0,
             "stg": {"c38": 7.15},
             "amb": [0.28, 3.39, 0.15, 2.54],
@@ -79,7 +79,7 @@ def test_bench_diff_loads_r13_compact_schema(tmp_path):
     p.write_text(json.dumps(art))
     got = load_artifact(str(p), pm)
     assert got["queries"]["c05_streaming_interval_join"] == 4.11
-    assert got["queries"]["zq01_pricing_summary"] == 1.5
+    assert got["queries"]["zr01_classifier_scores"] == 1.5
     assert got["operator_total"] == 150.0
     assert got["staging_s"] == {"c38": 7.15}
     assert got["ambient_index"] == [0.28, 3.39, 0.15, 2.54]

@@ -49,8 +49,8 @@ def load_artifact(path: str, prefix_map: dict[str, str]) -> dict:
     - expand id-prefix query keys through the registry map — a prefix
       unknown to the CURRENT registry is retried with the ``z``
       prefix (the freeze rule makes every rename old → "z"+old, so an
-      old artifact's ``q01`` resolves to today's
-      ``zq01_pricing_summary``), else kept verbatim;
+      old artifact's ``r01`` resolves to today's
+      ``zr01_classifier_scores``), else kept verbatim;
     - a missing ``ambient_index`` (pre-r11 artifacts) stays missing —
       ``--normalize`` degrades to raw-only with a notice;
     - r13 compact-schema keys are mapped back to the canonical names:

@@ -1,8 +1,8 @@
 """Skew evidence harness (r4 verdict item 6): the fixture's 31-token
-vocabulary cannot show what `df_cap` and `salted_join` buy at scale,
-so this tool builds synthetic workloads with REALISTIC shape — a
-hot-token, low-pair-density corpus and a 90%-hot-key dimension join —
-and measures each mitigation against its naive plan.
+vocabulary cannot show what `df_cap` buys at scale, so this tool
+builds synthetic workloads with REALISTIC shape — a hot-token,
+low-pair-density corpus and a giant-group sample — and measures each
+mitigation against its naive plan.
 
 Run: python tools/skew_bench.py [--docs 20000] [--rows 2000000]
 Prints one JSON object; the numbers land in SCALING.md ("Skew
@@ -18,12 +18,6 @@ Workloads:
    df_in·df_corp pair rows; df_cap routes it off the join and
    recovers exact intersections from per-doc hot arrays. Both plans
    must return IDENTICAL pairs (asserted).
-
-2. **salted_join under a 90% hot key** — `--rows` fact rows, 90% on
-   one city_slug, joined to a 200-row dim with a 64-double payload.
-   Legs: broadcast (the default and winner when the dim fits),
-   shuffle join with AQE skew handling, shuffle join without AQE,
-   and salted_join(salts=16). Row counts asserted equal.
 
 Everything is hash-derived (no RNG): rerunning reproduces the same
 corpus and the same numbers modulo machine noise.
@@ -152,72 +146,6 @@ def bench_containment_cap(spark, n_docs: int) -> dict:
     }
 
 
-def bench_salted(spark, n_rows: int) -> dict:
-    from trendr_data_pipeline_spark.operators.skew import salted_join
-
-    facts = spark.range(n_rows).select(
-        F.col("id").alias("fact_id"),
-        # 90% of rows on one hot city, rest across 199 others
-        F.when(
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(10)) < 9, F.lit("hot-city")
-        )
-        .otherwise(
-            F.concat(F.lit("c"), F.pmod(F.xxhash64("id", F.lit(2)), F.lit(199)).cast("string"))
-        )
-        .alias("city_slug"),
-    )
-    dim = spark.range(200).select(
-        F.when(F.col("id") == 0, F.lit("hot-city"))
-        .otherwise(F.concat(F.lit("c"), (F.col("id") - 1).cast("string")))
-        .alias("city_slug"),
-        F.transform(F.sequence(F.lit(0), F.lit(63)), lambda i: F.rand(7)).alias(
-            "payload"
-        ),
-    )
-    facts = spark.read.parquet(str(_materialize(spark, facts, f"skew_facts_{n_rows}")))
-    dim = spark.read.parquet(str(_materialize(spark, dim, "skew_dim")))
-
-    def agg(df):
-        return df.agg(F.count(F.lit(1)), F.sum(F.element_at("payload", 1))).collect()
-
-    def leg_broadcast():
-        agg(facts.join(F.broadcast(dim), "city_slug"))
-
-    def with_conf(k, v):
-        class _C:
-            def __enter__(self):
-                self.old = spark.conf.get(k)
-                spark.conf.set(k, v)
-
-            def __exit__(self, *a):
-                spark.conf.set(k, self.old)
-
-        return _C()
-
-    def leg_shuffle(aqe_skew: bool):
-        with with_conf("spark.sql.autoBroadcastJoinThreshold", "-1"), with_conf(
-            "spark.sql.adaptive.skewJoin.enabled", str(aqe_skew).lower()
-        ):
-            agg(facts.join(dim, "city_slug"))
-
-    def leg_salted():
-        with with_conf("spark.sql.autoBroadcastJoinThreshold", "-1"):
-            agg(salted_join(facts, dim, on="city_slug", salts=16))
-
-    n_b = facts.join(F.broadcast(dim), "city_slug").count()
-    with with_conf("spark.sql.autoBroadcastJoinThreshold", "-1"):
-        n_s = salted_join(facts, dim, on="city_slug", salts=16).count()
-    assert n_b == n_s == n_rows, (n_b, n_s)
-    return {
-        "rows": n_rows,
-        "broadcast_s": _timed(leg_broadcast),
-        "shuffle_aqe_skew_s": _timed(lambda: leg_shuffle(True)),
-        "shuffle_no_aqe_s": _timed(lambda: leg_shuffle(False)),
-        "salted16_s": _timed(leg_salted),
-    }
-
-
-
 def bench_stratified_threshold(spark, n_rows: int) -> dict:
     """Workload 4 (r8): the stratified-sample giant-group shape — one
     language holds ~all rows (the real lang distribution at corpus
@@ -300,7 +228,6 @@ def main() -> int:
     spark = get_spark("skew-bench", cpus=32)
     out = {
         "df_cap": bench_df_cap(spark, args.docs),
-        "salted_join": bench_salted(spark, args.rows),
         "containment_cap": bench_containment_cap(spark, args.containment_docs),
         "stratified_threshold": bench_stratified_threshold(spark, args.rows),
     }

@@ -147,14 +147,3 @@ def write_partitioned(
     table is also join-heavy on a high-cardinality key."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register fixture tables as temp views for the SQL surface."""
-    from . import schemas
-
-    for n in names or list(schemas.GENERIC):
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)

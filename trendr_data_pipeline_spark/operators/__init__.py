@@ -10,7 +10,7 @@ POI pipeline:
 - ``collections`` : collection tag engine
 - ``spatial``     : haversine/bbox joins, point-in-polygon refine
 - ``temporal``    : interval joins
-- ``skew``        : skew mitigation and co-located joins
+- ``skew``        : bucketed co-located joins (c54's layout)
 
 Corpus/LLM-data operators (no POI caller):
 

@@ -17,7 +17,7 @@ The weak label is derived from the t03 quality blend (above/below
 the corpus median): the test of this operator is the PLUMBING —
 features → assembler → scaler → LBFGS → scores — with an AUC floor
 on held-out rows pinned in pytest, not SQL-oracle equality (iterative
-optimization has no static SQL twin; same rows-only posture as x01).
+optimization has no static SQL twin).
 """
 
 from __future__ import annotations

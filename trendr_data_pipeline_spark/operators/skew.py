@@ -1,56 +1,18 @@
-"""Skew mitigation + co-located join utilities.
+"""Co-located join utility.
 
 AQE's skew-join handling (``spark.sql.adaptive.skewJoin``) splits
 oversized sort-merge partitions at runtime and is enabled by the
-session defaults; these helpers cover the cases AQE does not:
-
-- :func:`salted_join` — explicit key salting for joins AQE cannot
-  re-plan (e.g. when the skewed side feeds a window right after the
-  join, or under streaming micro-batches where AQE is off). The big
-  side's hot key is sharded across ``salts`` reducers; the small side
-  replicates to every shard. Exact join semantics, output identical
-  to the unsalted join.
-- :func:`write_bucketed` — persist a table hash-bucketed (and
-  sorted) by its join key so repeated large-large joins on that key
-  run WITHOUT an exchange on either side: the scan's bucketing is the
-  join's required distribution. This is the co-location story for
-  fact-fact joins too big to broadcast: pay the shuffle once at write
-  time, never per query.
+session defaults. :func:`write_bucketed` persists a table
+hash-bucketed (and sorted) by its join key so repeated large-large
+joins on that key run WITHOUT an exchange on either side: the scan's
+bucketing is the join's required distribution. This is the
+co-location story for fact-fact joins too big to broadcast: pay the
+shuffle once at write time, never per query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join sharding ``skewed``'s hot keys across ``salts``
-    sub-partitions.
-
-    The skewed side gets a deterministic content-derived salt in
-    [0, salts); the other side explodes to all ``salts`` values, so
-    every (key, salt) shard sees the full matching row set — exact
-    join semantics at ``salts``× replication of the small(er) side's
-    shuffle. Use when one reducer key dominates and the plan can't be
-    AQE-re-planned; prefer ``F.broadcast`` when the other side simply
-    fits in memory."""
-    if how.replace("_", "").lower() not in {"inner", "left", "leftouter"}:
-        # right/full joins would emit the replicated small side once
-        # per salt for unmatched rows — semantics break, refuse early
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    salt = F.pmod(F.xxhash64(F.struct(*[F.col(c) for c in skewed.columns])), F.lit(salts))
-    left = skewed.withColumn("_salt", salt)
-    right = other.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)).cast("array<long>"))
-    )
-    return left.join(right, [on, "_salt"], how).drop("_salt")
 
 
 def write_bucketed(

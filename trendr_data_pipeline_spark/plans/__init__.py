@@ -3,6 +3,11 @@
 Every module in this package registers queries with
 :mod:`trendr_data_pipeline_spark.plans.registry`; importing the package
 populates the registry. ``__spark_entry__`` (repo root) simply reads it.
+The POI-stage queries are in ``spatial_ops``, ``grid_ops``,
+``reference_ops`` and ``scalar_ops``, with the streaming gates in
+``pipeline_ops``. ``events_ops`` (event analytics) and ``layout_ops``
+(partition pruning and bucketed joins) are the last non-POI fixture
+queries, and the rest is the corpus/LLM-data suite.
 """
 
 from __future__ import annotations
@@ -12,8 +17,6 @@ from . import registry  # noqa: F401
 
 def load_all() -> None:
     """Import every query module (idempotent)."""
-    from . import relational  # noqa: F401
-    from . import analytics  # noqa: F401
     from . import text_ops  # noqa: F401
     from . import dedup_ops  # noqa: F401
     from . import similarity_ops  # noqa: F401

@@ -1,17 +1,16 @@
-"""Pipeline-level queries: the full mention-scanning plan (§3.2) and
-the streaming surface exposed through the driver contract, plus the
-remaining small-operator coverage (F1/U3 allowlists, A12 keyword
-trends).
+"""Pipeline-level queries: the streaming surface exposed through the
+driver contract, plus the remaining small-operator coverage (F1/U3
+allowlists, A12 keyword trends).
 
-The mention pipeline stays a rows-only check (difflib UDFs are not
-ANSI-SQL-expressible; pytest pins its per-component semantics). The
-streaming surface graduated in stages: windowed/aggregating jobs
-replay against SQL twins (c05/c18), and since r12/r13 the STATEFUL
-jobs are oracle-gated too, via planted waves whose deterministic
-arithmetic makes the state machine SQL-replayable — c58 (≤N-per-key
-dedup counters), c61 (event-time rescan timeouts), c62 (cadence
-last-emitted state); see each gate's docstring for what its device
-makes load-bearing.
+The mention stage has no query here: ``pipeline.run_auto_pipeline``
+composes it once, and ``tests/test_mentions.py`` and
+``tests/test_pipeline_e2e.py`` pin it. The streaming surface graduated
+in stages: windowed/aggregating jobs replay against SQL twins
+(c05/c18), and since r12/r13 the STATEFUL jobs are oracle-gated too,
+via planted waves whose deterministic arithmetic makes the state
+machine SQL-replayable — c58 (≤N-per-key dedup counters), c61
+(event-time rescan timeouts), c62 (cadence last-emitted state); see
+each gate's docstring for what its device makes load-bearing.
 """
 
 from __future__ import annotations
@@ -21,106 +20,6 @@ from pyspark.sql import functions as F
 
 from ..io import read_table
 from .registry import register
-
-# ---------------------------------------------------------------------------
-# x01 (p01 through r3) — full mention pipeline (rows-only; pytest holds
-# the oracle). Renamed r4: the driver's correctness pass records only
-# the first 50 queries in sorted order, and this one is rows-only
-# anyway (difflib UDFs are not SQL-expressible) — the x-prefix parks
-# it past the cap so every oracle-bearing query gets a recorded gate.
-# It still runs under bench and the sf0.001 pytest contract gate.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "x01_mention_pipeline",
-    None,
-    doc="""End-to-end §3.2 plan on candidates synthesized from orders:
-    normalize → catalog resolve → name/geo/penalty scoring (difflib +
-    trigram UDFs) → decision ladder → windowed dedup. Rows-only here;
-    tests/test_mentions.py pins the per-component semantics.""",
-)
-def p01_mention_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mentions import score_candidates, windowed_dedup
-    from ..schemas import DOMAIN
-
-    # small candidate batch (the scanner processes per-POI batches of
-    # ~100 candidates); 8 partitions balances pandas-UDF parallelism
-    # against per-task Arrow overhead at this row count (32 near-empty
-    # tasks measured slower)
-    o = read_table(spark, sf_dir, "orders").limit(2000).repartition(8)
-    city = F.when(F.col("o_orderkey") % 3 == 0, "paris").otherwise("lyon")
-    cands = o.select(
-        F.col("o_custkey").cast("string").alias("poi_id"),
-        F.concat(F.lit("Venue "), (F.col("o_custkey") % 100).cast("string")).alias("poi_name"),
-        city.alias("city_slug"),
-        F.concat(
-            F.lit("https://site"),
-            (F.col("o_orderkey") % 9).cast("string"),
-            F.lit(".fr/"),
-            city,
-            F.lit("/venue-"),
-            (F.col("o_custkey") % 100).cast("string"),
-            F.when(F.col("o_orderkey") % 4 == 0, "-part2").otherwise(""),
-        ).alias("url"),
-        F.concat(
-            F.lit("Venue "),
-            (F.col("o_custkey") % 100).cast("string"),
-            F.when(F.col("o_orderkey") % 5 == 0, F.lit(" — best of paris 75011")).otherwise(
-                F.lit(" review")
-            ),
-            F.when(F.col("o_orderkey") % 17 == 0, F.lit(" (germany edition)")).otherwise(F.lit("")),
-        ).alias("title"),
-        F.lit("a nice spot in town").alias("snippet"),
-        F.lit(None).cast("string").alias("domain"),
-        (48.8 + (F.col("o_custkey") % 20) * 0.005).alias("poi_lat"),
-        (2.3 + (F.col("o_custkey") % 20) * 0.005).alias("poi_lng"),
-        F.lit(None).cast("timestamp").alias("published_at"),
-    )
-    profiles = spark.createDataFrame(
-        [
-            ("paris", ["paris"], "FR", ["île-de-france"], ["75", "750"],
-             48.8156, 48.9021, 2.2247, 2.4698, 48.8566, 2.3522, ["lyon", "marseille"]),
-            ("lyon", ["lyon"], "FR", ["rhône"], ["69", "690"],
-             45.7078, 45.8084, 4.7847, 4.9228, 45.7640, 4.8357, ["paris", "marseille"]),
-        ],
-        "city_slug string, city_names_aliases array<string>, country_code string,"
-        " admin_names array<string>, postal_prefixes array<string>, lat_min double,"
-        " lat_max double, lng_min double, lng_max double, centroid_lat double,"
-        " centroid_lng double, competing_cities array<string>",
-    )
-    cat_rows = [
-        ("site0", "https://site0.fr", "guide", 1.0),
-        ("site1", "https://site1.fr", "press", 0.8),
-        ("site2", "https://site2.fr", "local", 0.5),
-    ]
-    catalog = spark.createDataFrame(
-        [
-            tuple(
-                {**{f.name: None for f in DOMAIN["source_catalog"].fields},
-                 "source_id": sid, "base_url": url, "type": t, "authority_weight": w,
-                 "is_active": True}[f.name]
-                for f in DOMAIN["source_catalog"].fields
-            )
-            for sid, url, t, w in cat_rows
-        ],
-        DOMAIN["source_catalog"],
-    )
-    as_of = F.lit("2000-01-01").cast("timestamp")
-    scored = score_candidates(cands, profiles, catalog, as_of)
-    accepted = (
-        scored.filter(F.col("decision") == "ACCEPT")
-        .withColumn("source_id", F.coalesce(F.col("cat_source_id"), F.lit("discovered")))
-        # W1 ranks by stored authority_weight · w_time (dedup.py:83-86)
-        .withColumn("authority_weight", F.col("authority"))
-        .withColumn("w_time", F.lit(1.0))
-    )
-    deduped = windowed_dedup(accepted, as_of, max_per_window=2)
-    return deduped.select(
-        "poi_id", "url", "decision", "accepted_by",
-        F.round("final_score", 6).alias("final_score"), "dedup_rank",
-    )
-
 
 # ---------------------------------------------------------------------------
 # shared synchronous-replay harness for the streaming gates

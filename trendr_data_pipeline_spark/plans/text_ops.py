@@ -1256,8 +1256,7 @@ def x17_quality_embedding_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-computed text features → VectorAssembler → StandardScaler →
     pyspark.ml LogisticRegression (distributed L-BFGS), deterministic
     md5 hash split, every doc scored. Rows-only under the driver gate
-    (iterative optimization has no static SQL twin; same posture as
-    x01); held-out AUC ≥ 0.9 and split determinism pinned in
+    (iterative optimization has no static SQL twin); held-out AUC ≥ 0.9 and split determinism pinned in
     tests/test_quality.py.""",
 )
 def x16_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1746,7 +1745,7 @@ def t14_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(20, |group|) docs per language, chosen by md5 hash order of
     the doc id with key tie-break — the evaluation-set construction
     step, stable across engines. ONE exchange on the group key (the
-    W1/q03 per-group top-k family).""",
+    W1 per-group top-k family).""",
 )
 def t15_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import stratified_sample
