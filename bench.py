@@ -180,7 +180,8 @@ RENAMES_R9: dict[str, str] = {
     "s06_ttl_due_filter": "zs06_ttl_due_filter",
     # admits c39_exact_substring_runs (ExactSubstr maximal runs)
     "s04_haversine_bands": "zs04_haversine_bands",
-    # admits c40_data_card (per-source × per-split corpus data card)
+    # admitted c40_data_card (corpus data card, since removed —
+    # REMOVED_GATES)
     "s02_url_functions": "zs02_url_functions",
     # admits c41_keep_first_removal (occurrence-grain span dedup)
     "s01_flexible_date_parse": "zs01_flexible_date_parse",
@@ -193,13 +194,13 @@ RENAMES_R9: dict[str, str] = {
 RENAMES_R10: dict[str, str] = {
     # admits c43_contaminated_runs (run-grain decontamination)
     "r03_decision_ladder": "zr03_decision_ladder",
-    # admits c44_incremental_data_card (O(delta) card refresh)
+    # admitted c44_incremental_data_card (since removed — REMOVED_GATES)
     "r02_windowed_dedup": "zr02_windowed_dedup",
     # admits c45_cdc_chunk_dedup (content-defined chunk dedup)
     "q09_filtered_scan": "zq09_filtered_scan",
     # admits c46_fuzzy_decontam (doc-level fuzzy decontamination)
     "r01_classifier_scores": "zr01_classifier_scores",
-    # admits c47_source_overlap (cross-source n-gram overlap matrix)
+    # admitted c47_source_overlap (since removed — REMOVED_GATES)
     "q07_distinct_counts": "zq07_distinct_counts",
     # admits c48_quality_calibration (per-source quantile calibration)
     "q06_rollup_region_nation": "zq06_rollup_region_nation",
@@ -260,6 +261,9 @@ RENAMES = {
 REMOVED_GATES = (
     # deleted with the persisted MinHash index it refreshed
     "c38_release_cycle",
+    # the corpus data card (plans/data_card), admitted by the s02, r02
+    # and q07 pushes
+    "c40_data_card", "c44_incremental_data_card", "c47_source_overlap",
 )
 
 #: expected names (frozen, or the z-name a push record gave them) that
@@ -276,6 +280,14 @@ REMOVED_NAMES = (
     "zq03_top_customers_per_nation", "zq04_returned_orders_by_priority",
     "zq05_customers_without_orders", "zq06_rollup_region_nation",
     "zq07_distinct_counts", "zq08_set_ops_customers", "zq09_filtered_scan",
+    # in-query vector search (plans/similarity_ops: exact, LSH, IVF, PQ,
+    # IVFPQ and filtered top-k, int8 quantization, label centroids)
+    "c24_ivfpq_topk", "c31_filtered_ann", "x02_ivf_fast_topk",
+    "x09_embedding_quantize", "x11_pq_topk", "x12_pq_fast_topk",
+    "x14_label_centroids", "x24_ivfpq_fast_topk", "zm01_cosine_topk",
+    "zm03_ivf_topk",
+    # the zlib compression-ratio signal, which had no oracle
+    "t16_compression_ratio",
 )
 
 #: bench-only legs — z-named PAST the driver window at creation,

@@ -21,21 +21,18 @@ sys.path.insert(0, str(REPO))
 # bucket, merge sinks, nightly-ops recipe, interval-join property and
 # the determinism of c05/c58/c61/c62) are not in the set: they run by
 # default. The default set keeps every oracle-gate param and a
-# determinism pin for 87 of the 93 registered queries.
+# determinism pin for 75 of the 79 registered queries.
 # Entries are nodeid fragments: "file::test" marks the whole function
 # (all params); "file::test[param]" marks one param.
 # ---------------------------------------------------------------------------
 SLOW_CALLS = {
     # dedup/similarity brute-force and boundary sweeps
-    "test_dedup_similarity.py::test_filtered_ann_prefilter_semantics",
-    "test_dedup_similarity.py::test_ivf_recall_and_score_exactness",
     "test_dedup_similarity.py::test_jaccard_df_cap_boundary_equivalence",
     "test_dedup_similarity.py::test_jaccard_pairs_df_cap_boundary_equivalence",
     "test_dedup_similarity.py::test_ngram_jaccard_topk_matches_bruteforce",
     "test_dedup_similarity.py::test_jaccard_df_cap_safety_check",
     "test_dedup_similarity.py::test_maximal_runs_property_random_corpora",
     # double-run determinism: only the heavy corpus queries
-    "test_determinism.py::test_query_is_deterministic[c40_data_card]",
     "test_determinism.py::test_query_is_deterministic[x16_quality_classifier]",
     "test_determinism.py::test_query_is_deterministic[x21_semantic_dedup]",
     "test_determinism.py::test_query_is_deterministic[c42_bm25_topk]",
@@ -50,40 +47,34 @@ SLOW_CALLS = {
     "test_packing.py::test_global_offsets_property_random_frames",
     "test_property_text.py::test_duplicated_spans_match_bruteforce",
     "test_property_text.py::test_trigram_fuzzy_property",
-    "test_property_text.py::test_quantize_engine_parity_random_vectors",
     "test_property_text.py::test_normalize_property",
     "test_quality.py::test_property_token_streams",
     "test_text_selection.py::test_bm25_capped_leg_recall_and_error_bound",
-    "test_text_selection.py::test_incremental_data_card_converges_and_noop",
     "test_text_selection.py::test_bm25_df_cap_prunes_hot_terms_exactly",
     "test_text_selection.py::test_stratified_sample_property_random_shapes",
     # the 7.5-10 s band (oracle-gate params are never in the set)
-    "test_determinism.py::test_query_is_deterministic[c44_incremental_data_card]",
-    "test_dedup_similarity.py::test_ivf_recall_at_production_setting",
     "test_dedup_similarity.py::test_minhash_verify_legs_agree",
     "test_dedup_similarity.py::test_semantic_dedup_invariants",
     "test_dedup_similarity.py::test_embedding_near_dup_finds_planted_pairs",
     "test_dedup_similarity.py::test_fingerprint_match_pairs_scopes_its_persist",
-    "test_dedup_similarity.py::test_ivfpq_production_recall_and_determinism",
     "test_dedup_similarity.py::test_ngram_contamination_flags",
     "test_dedup_similarity.py::test_containment_pairs_df_cap_equivalence",
     "test_property_text.py::test_word_ngram_hash_flags_match_string_flags",
     "test_property_text.py::test_dedupe_key_property",
-    "test_text_selection.py::test_data_card_null_and_literal_all_source_parity",
     "test_packing.py::test_chunk_documents_is_streaming_compatible",
 }
 
 
 def pytest_collection_modifyitems(config, items):
-    """Skip the slow set (SLOW_CALLS above, plus anything carrying an
-    explicit ``slow`` marker) unless SPARK_GRAFT_FULL_TESTS=1."""
+    """Skip the slow set (SLOW_CALLS above) unless
+    SPARK_GRAFT_FULL_TESTS=1."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
     skip = pytest.mark.skip(reason="slow (set SPARK_GRAFT_FULL_TESTS=1)")
     for item in items:
         nodeid = item.nodeid.split("/")[-1]  # "file.py::name[param]"
         base = nodeid.split("[", 1)[0]
-        if "slow" in item.keywords or nodeid in SLOW_CALLS or base in SLOW_CALLS:
+        if nodeid in SLOW_CALLS or base in SLOW_CALLS:
             item.add_marker(skip)
 
 SMOKE_SF = "/root/testdata/sf0.001"

@@ -1,5 +1,5 @@
 """Operator-level tests: SimHash Python oracle, MinHash-LSH recall vs
-exact Jaccard, ANN-LSH recall vs brute-force cosine."""
+exact Jaccard, embedding near-dup pairs and semantic dedup."""
 
 from __future__ import annotations
 
@@ -13,10 +13,7 @@ from trendr_data_pipeline_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_fingerprints,
 )
-from trendr_data_pipeline_spark.operators.similarity import (
-    cosine_topk_bruteforce,
-    lsh_bucketed_topk,
-)
+from trendr_data_pipeline_spark.operators.similarity import cosine_topk_bruteforce
 
 
 def test_simhash_matches_python_oracle(spark):
@@ -64,79 +61,6 @@ def test_incremental_topk_exact_equals_lsh(spark):
     lsh = {(r["id_a"], r["id_b"], r["rk"]) for r in minhash_lsh_topk_join(incoming, docs, 0.8).collect()}
     assert exact == lsh
     assert exact
-
-
-def test_ann_lsh_recall(spark):
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = cosine_topk_bruteforce(queries, emb, k=10).collect()
-    approx = lsh_bucketed_topk(queries, emb, k=10).collect()
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    # fixture embeddings are near-random (same-label neighbor fraction
-    # ≈ chance), the hardest case for LSH; on clustered data recall is
-    # far higher. 4 bits × 16 tables gives ~0.88 here.
-    assert recall >= 0.7, f"ANN recall too low: {recall}"
-
-
-def test_ann_candidates_subset_scored_correctly(spark):
-    """Every LSH-returned (query, neighbor, sim) must agree with the
-    brute-force cosine for that pair (scores are exact; only the
-    candidate set is approximate)."""
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact_all = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in cosine_topk_bruteforce(queries, emb, k=10**9).collect()
-    }
-    for r in lsh_bucketed_topk(queries, emb, k=10).collect():
-        assert abs(exact_all[(r["query_id"], r["neighbor_id"])] - r["cosine_sim"]) < 1e-9
-
-
-def test_ivf_recall_and_score_exactness(spark):
-    from trendr_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = cosine_topk_bruteforce(queries, emb, k=10).collect()
-    ivf = ivf_topk(queries, emb, k=10, nlist=8, nprobe=3).collect()
-    exact_map = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in cosine_topk_bruteforce(queries, emb, k=10**9).collect()
-    }
-    # scores of returned pairs are exact
-    for r in ivf:
-        assert abs(exact_map[(r["query_id"], r["neighbor_id"])] - r["cosine_sim"]) < 1e-9
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    ivf_set = {(r["query_id"], r["neighbor_id"]) for r in ivf}
-    recall = len(exact_set & ivf_set) / len(exact_set)
-    # near-random vectors cluster poorly — still demand a useful floor
-    assert recall >= 0.4, f"IVF recall too low: {recall}"
-    # determinism: same seed → same result
-    ivf2 = {(r["query_id"], r["neighbor_id"]) for r in ivf_topk(queries, emb, k=10, nlist=8, nprobe=3).collect()}
-    assert ivf_set == ivf2
-
-
-def test_ivf_recall_at_production_setting(spark):
-    """x02's exact configuration (nlist=16, nprobe=4): the recall the
-    registry docstring cites must actually hold. Measured 0.62 on this
-    isotropic fixture (IVF's worst case — no cluster structure); the
-    floor asserts the configuration stays in that regime."""
-    from trendr_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_bruteforce(queries, emb, k=10).collect()
-    }
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(queries, emb, k=10, nlist=16, nprobe=4).collect()
-    }
-    recall = len(exact & ivf) / len(exact)
-    assert recall >= 0.5, f"recall at production setting dropped to {recall}"
 
 
 def test_shingle_set_parity_and_edges(spark):
@@ -456,32 +380,6 @@ def test_semantic_dedup_invariants(spark):
         assert not (a in survivors and b in survivors), (a, b)
 
 
-def test_quantize_embeddings_invariants(spark):
-    """int8 quantization: codes bounded [0,255], reconstruction error
-    ≤ scale/2 (+ the 1e-6 integer-microunit grain), constant vectors
-    quantize to all-zero codes with zero error, and the operator is
-    deterministic (codes_md5 stable across evaluations)."""
-    from trendr_data_pipeline_spark.operators.similarity import quantize_embeddings
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    const = spark.createDataFrame(
-        [(100000, [1.5] * 8, 0)], "vec_id bigint, embedding array<float>, label int"
-    )
-    out = quantize_embeddings(emb.unionByName(const)).collect()
-    assert len(out) == emb.count() + 1
-    by_id = {r["vec_id"]: r for r in out}
-    c = by_id[100000]
-    assert c["scale_q"] == 0.0 and c["code_min"] == 0 and c["code_max"] == 0
-    assert c["mae_micro"] == 0.0
-    for r in out:
-        assert 0 <= r["code_min"] <= r["code_max"] <= 255
-        # mae ≤ scale/2 + the 1e-6 quantization grain
-        assert r["mae_micro"] / 1e6 <= r["scale_q"] / 2 + 2e-6
-    again = {r["vec_id"]: r["codes_md5"]
-             for r in quantize_embeddings(emb.unionByName(const)).collect()}
-    assert again == {r["vec_id"]: r["codes_md5"] for r in out}
-
-
 def test_temperature_mix_flattens_sources(spark):
     """α=1/2 temperature mixing: every rate ≤ 1, smaller sources keep
     a HIGHER fraction than larger ones (the flattening property), the
@@ -509,49 +407,6 @@ def test_temperature_mix_flattens_sources(spark):
     assert [tuple(r) for r in again] == [tuple(r) for r in rows]
 
 
-def test_pq_degenerate_config_equals_bruteforce(spark):
-    """x11's gate premise, asserted as a pytest oracle too: with the
-    codebook covering every distinct subvector (ksub ≥ corpus) and
-    exact rescoring, PQ output == the m01 brute force, row for row."""
-    from trendr_data_pipeline_spark.operators.similarity import pq_topk
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = {(r["query_id"], r["neighbor_id"], r["cosine_sim"], r["rk"])
-             for r in cosine_topk_bruteforce(queries, emb, k=10).collect()}
-    pq = {(r["query_id"], r["neighbor_id"], r["cosine_sim"], r["rk"])
-          for r in pq_topk(queries, emb, k=10, m=8, ksub=512,
-                           candidates=50, train_sample=32768).collect()}
-    assert pq == exact
-
-
-def test_pq_recall_at_production_setting(spark):
-    """x12's exact configuration (m=8, ksub=16, candidates=50):
-    returned scores are exact (rescored), recall vs brute force holds
-    a floor on the isotropic fixture (PQ's worst case — quantization
-    error is maximal on clusterless vectors), and the result is
-    deterministic for a fixed seed."""
-    from trendr_data_pipeline_spark.operators.similarity import pq_topk
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    exact_map = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in cosine_topk_bruteforce(queries, emb, k=10**9).collect()
-    }
-    pq = pq_topk(queries, emb, k=10, m=8, ksub=16, candidates=50).collect()
-    for r in pq:
-        assert abs(exact_map[(r["query_id"], r["neighbor_id"])] - r["cosine_sim"]) < 1e-9
-    exact_set = {(r["query_id"], r["neighbor_id"])
-                 for r in cosine_topk_bruteforce(queries, emb, k=10).collect()}
-    pq_set = {(r["query_id"], r["neighbor_id"]) for r in pq}
-    recall = len(exact_set & pq_set) / len(exact_set)
-    assert recall >= 0.4, f"PQ recall too low: {recall}"
-    pq2 = {(r["query_id"], r["neighbor_id"])
-           for r in pq_topk(queries, emb, k=10, m=8, ksub=16, candidates=50).collect()}
-    assert pq_set == pq2
-
-
 def test_duplicated_span_coverage_planted(spark):
     """x13's semantics on a hand-built corpus: a 10-token span shared
     by two docs marks 3 windows each (10-8+1) covering all 10 tokens;
@@ -577,33 +432,6 @@ def test_duplicated_span_coverage_planted(spark):
     assert out[2]["dup_frac"] == round(10 / 12, 6)
     assert out[3]["n_dup_windows"] == 0 and out[3]["dup_frac"] == 0.0
     assert out[4]["n_tok"] == 2 and out[4]["n_dup_windows"] == 0
-
-
-def test_label_centroid_stats_matches_numpy(spark):
-    """x14 vs a direct numpy oracle on the smoke fixture: centroid
-    norms and cosine-to-centroid stats agree to the rounding grain,
-    and group sizes partition the corpus."""
-    import numpy as np
-
-    from trendr_data_pipeline_spark.operators.similarity import label_centroid_stats
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    rows = emb.collect()
-    out = {r["label"]: r for r in label_centroid_stats(emb).collect()}
-    assert sum(r["n_vecs"] for r in out.values()) == len(rows)
-    by_label: dict[int, list] = {}
-    for r in rows:
-        by_label.setdefault(r["label"], []).append(np.asarray(r["embedding"], dtype=np.float64))
-    for lab, vecs in by_label.items():
-        X = np.stack(vecs)
-        c = X.mean(axis=0)
-        got = out[lab]
-        assert got["n_vecs"] == len(vecs)
-        assert abs(got["centroid_norm_q"] - np.linalg.norm(c)) < 1e-4
-        cos = X @ c / (np.linalg.norm(X, axis=1) * np.linalg.norm(c))
-        assert abs(got["mean_cos"] - cos.mean()) < 1e-4
-        assert abs(got["min_cos"] - cos.min()) < 1e-4
-        assert abs(got["max_cos"] - cos.max()) < 1e-4
 
 
 def test_hashed_vectors_round_trip_into_similarity(spark):
@@ -690,111 +518,6 @@ def test_quality_model_scopes_its_cache(spark):
     assert not _unscoped_persisted_rdds(spark, before)
 
 
-def test_ann_query_batch_guard(spark):
-    """r5 verdict item 4: the PQ/IVFPQ query-side collect must refuse
-    unbounded query frames with a clear chunking instruction instead
-    of OOMing the driver — and disjoint chunks must concatenate to
-    the whole-batch result exactly (the contract the error cites)."""
-    import pytest
-
-    from trendr_data_pipeline_spark.operators.similarity import (
-        MAX_QUERY_ROWS,
-        _collect_query_rows,
-        pq_topk,
-    )
-
-    big = spark.range(MAX_QUERY_ROWS + 5).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
-        _collect_query_rows(big, "vec_id", "embedding")
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    whole = sorted(
-        tuple(r) for r in pq_topk(queries, emb, k=5, m=8, ksub=16).collect()
-    )
-    chunks = [
-        r
-        for half in (
-            queries.filter(F.col("vec_id") % 100 == 0),
-            queries.filter(F.col("vec_id") % 100 != 0),
-        )
-        for r in pq_topk(half, emb, k=5, m=8, ksub=16).collect()
-    ]
-    assert sorted(tuple(r) for r in chunks) == whole
-
-
-def test_ivfpq_degenerate_exact_equals_bruteforce(spark):
-    """c24's gate argument locally: full probe + corpus-covering
-    codebook ⇒ IVFPQ == brute force."""
-    from trendr_data_pipeline_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivfpq_topk,
-    )
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    n = emb.count()
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    got = sorted(
-        tuple(r)
-        for r in ivfpq_topk(
-            emb.filter(F.col("vec_id") % 100 == 0), emb, k=10,
-            nlist=16, nprobe=16, m=8, ksub=max(16, n), train_sample=n,
-        ).collect()
-    )
-    want = sorted(tuple(r) for r in cosine_topk_bruteforce(queries, emb, k=10).collect())
-    assert got == want
-
-
-def test_ivfpq_production_recall_and_determinism(spark):
-    """x24: recall floor vs brute force at the production setting on
-    the isotropic fixture. r6 residual encoding: the residual ADC
-    ranking recovers every neighbor the 4-of-16 probe set admits, so
-    combined recall equals the IVF probe ceiling (0.62 measured on
-    this fixture, vs 0.37 for the r5 no-residual form at the same
-    32× compression). Pinned at the verdict's ≥ 0.6 done-criterion;
-    plus run-to-run determinism."""
-    from trendr_data_pipeline_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivfpq_topk,
-    )
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    kw = dict(k=10, nlist=16, nprobe=4, m=8, ksub=16, candidates=100)
-    got = ivfpq_topk(queries, emb, **kw).collect()
-    again = ivfpq_topk(queries, emb, **kw).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, again))
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_bruteforce(queries, emb, k=10).collect()
-    }
-    hits = sum(1 for r in got if (r["query_id"], r["neighbor_id"]) in truth)
-    recall = hits / max(1, len(truth))
-    assert recall >= 0.6, recall
-    # the probe set is the only loss: IVF at the same nlist/nprobe
-    # admits exactly these neighbors, and residual ADC keeps them all
-    from trendr_data_pipeline_spark.operators.similarity import ivf_topk
-
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(queries, emb, k=10, nlist=16, nprobe=4).collect()
-    }
-    assert recall >= len(truth & ivf) / max(1, len(truth)) - 1e-9
-    # every returned score is EXACT (rescored on raw vectors): each
-    # (q, n) pair's cosine matches the brute-force value when present
-    bf = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in cosine_topk_bruteforce(queries, emb, k=50).collect()
-    }
-    for r in got:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in bf:
-            assert abs(bf[key] - r["cosine_sim"]) < 1e-9
-
-
 def test_remove_duplicated_spans_keep_one_rule(spark):
     """c25: planted boilerplate is deleted from every doc EXCEPT the
     minimum-id owner; unique content is untouched; counts reconcile."""
@@ -837,42 +560,6 @@ def test_remove_duplicated_spans_keep_one_rule(spark):
     )
     cov = duplicated_span_coverage(cleaned, n=8).collect()
     assert all(r["n_dup_windows"] == 0 for r in cov)
-
-
-def test_ivfpq_recall_monotone_in_nprobe(spark):
-    """r6 verdict item 5: the serving knob works — recall vs brute
-    force rises monotonically with nprobe at the x24 operating point
-    (full curve over nprobe ∈ {1,2,4,8,16} in SCALING.md via
-    tools/ivfpq_recall_bench.py: 0.26 → 0.42 → 0.62 → 0.80 → 0.84 on
-    this fixture). Pinned at the {1,4,16} points with margin; at
-    nprobe=nlist the probe admits the whole corpus, so the residual
-    shortfall from 1.0 is ADC ranking alone (the `candidates` knob —
-    FAISS's k_factor — recovers it, measured in the same table)."""
-    from trendr_data_pipeline_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivfpq_topk,
-    )
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_bruteforce(queries, emb, k=10).collect()
-    }
-
-    def recall(nprobe: int) -> float:
-        got = ivfpq_topk(
-            queries, emb, k=10, nlist=16, nprobe=nprobe, m=8, ksub=16,
-            candidates=100,
-        ).collect()
-        hits = sum(
-            1 for r in got if (r["query_id"], r["neighbor_id"]) in truth
-        )
-        return hits / max(1, len(truth))
-
-    r1, r4, r16 = recall(1), recall(4), recall(16)
-    assert r1 < r4 < r16, (r1, r4, r16)
-    assert r16 >= 0.8, r16
 
 
 def test_winnow_fingerprints_matches_python_oracle(spark):
@@ -981,51 +668,6 @@ def test_fingerprint_match_pairs_scopes_its_persist(spark):
     assert not _unscoped_persisted_rdds(spark, before)
 
 
-def test_filtered_ann_prefilter_semantics(spark):
-    """t11's filtered search: (1) every returned neighbor satisfies
-    the predicate; (2) each query still gets a full k results (the
-    pre-filter vs post-cut distinction: a post-cut of the unfiltered
-    top-10 would keep only the ~quarter of winners that carry the
-    label); (3) filtered-IVF recall at production nprobe holds
-    against the filtered brute force; (4) scores exact."""
-    from trendr_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    pred = F.col("label") == 1
-    labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-
-    exact = cosine_topk_bruteforce(queries, emb, k=10, where=pred).collect()
-    assert all(labels[r["neighbor_id"]] == 1 for r in exact)
-    by_q = {}
-    for r in exact:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert all(len(v) == 10 for v in by_q.values())
-    # post-cut comparison: the unfiltered top-10 keeps far fewer
-    # label-1 rows than k for at least some query (so pre-filter
-    # genuinely differs from cutting the unfiltered result)
-    unfiltered = cosine_topk_bruteforce(queries, emb, k=10).collect()
-    kept = {}
-    for r in unfiltered:
-        kept[r["query_id"]] = kept.get(r["query_id"], 0) + (
-            1 if labels[r["neighbor_id"]] == 1 else 0
-        )
-    assert min(kept.values()) < 10
-
-    ivf = ivf_topk(queries, emb, k=10, nlist=8, nprobe=3, where=pred).collect()
-    assert all(labels[r["neighbor_id"]] == 1 for r in ivf)
-    exact_map = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in cosine_topk_bruteforce(queries, emb, k=10**9, where=pred).collect()
-    }
-    for r in ivf:
-        assert abs(exact_map[(r["query_id"], r["neighbor_id"])] - r["cosine_sim"]) < 1e-9
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    ivf_set = {(r["query_id"], r["neighbor_id"]) for r in ivf}
-    recall = len(exact_set & ivf_set) / len(exact_set)
-    assert recall >= 0.4, f"filtered IVF recall too low: {recall}"
-
-
 def test_containment_pairs_python_oracle_and_asymmetry(spark):
     """Python brute-force parity, plus the reason the operator exists:
     a short doc quoted whole inside a much larger one must score
@@ -1113,39 +755,6 @@ def test_containment_df_cap_check_raises_when_bound_fails(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     with pytest.raises(ValueError, match="not provably exact"):
         containment_pairs(df, threshold=0.9, df_cap=5, df_cap_check=True).collect()
-
-
-def test_filtered_ann_pq_and_ivfpq_paths(spark):
-    """where= on the compressed cold paths: with the candidate cut
-    wide open (ADC admits every matching row) and full probe, both
-    reduce to the exact rescore over the FILTERED corpus — equal to
-    the filtered brute force regardless of codebook quality."""
-    from trendr_data_pipeline_spark.operators.similarity import (
-        ivfpq_topk,
-        pq_topk,
-    )
-
-    emb = read_table(spark, SMOKE_SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    pred = F.col("label") == 1
-    want = sorted(
-        tuple(r) for r in cosine_topk_bruteforce(queries, emb, k=10, where=pred).collect()
-    )
-    got_pq = sorted(
-        tuple(r)
-        for r in pq_topk(
-            queries, emb, k=10, m=8, ksub=16, candidates=10**9, where=pred
-        ).collect()
-    )
-    assert got_pq == want
-    got_ivfpq = sorted(
-        tuple(r)
-        for r in ivfpq_topk(
-            queries, emb, k=10, nlist=8, nprobe=8, m=8, ksub=16,
-            candidates=10**9, where=pred,
-        ).collect()
-    )
-    assert got_ivfpq == want
 
 
 def test_containment_pairs_randomized_oracle(spark):
@@ -1903,46 +1512,3 @@ def test_benchmark_contamination_report_hand_built(spark):
         for r in benchmark_contamination_report(corpus, bench, n=8).collect()
     }
     assert got == {100: (2, 20), 101: (1, 8), 102: (0, 0)}
-
-
-def test_embedding_near_dup_join_corpus_extra_cols(spark):
-    """r13-opt O7 surface: corpus-side passthrough columns ride the
-    candidate distinct and land after cosine_sim; the default ()
-    keeps the historical 3-column schema byte-identical. A corpus id
-    present under two tag values yields one pair row per value (the
-    c57 screen's _self split relies on exactly this)."""
-    import numpy as np
-
-    from trendr_data_pipeline_spark.operators.similarity import (
-        embedding_near_dup_join,
-    )
-
-    r = np.random.RandomState(42)
-    v = r.randn(64)
-    v = v / np.linalg.norm(v)
-    w = r.randn(64)
-    w = w / np.linalg.norm(w)  # isotropic: cos(v, w) far below 0.99
-
-    def frame(rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in vec], t) for i, vec, t in rows],
-            "vec_id long, embedding array<double>, tag string",
-        )
-
-    incoming = frame([(10, v, "q")]).select("vec_id", "embedding")
-    corpus = frame(
-        [(1, v, "a"), (1, v, "b"), (2, w, "a")]  # id 1 under BOTH tags
-    )
-
-    got = embedding_near_dup_join(
-        incoming, corpus, threshold=0.99, corpus_extra_cols=("tag",)
-    ).collect()
-    assert sorted((r["id_a"], r["id_b"], r["tag"]) for r in got) == [
-        (10, 1, "a"),
-        (10, 1, "b"),
-    ]
-    assert all(abs(r["cosine_sim"] - 1.0) < 1e-6 for r in got)
-
-    # default: schema unchanged from the pre-passthrough contract
-    plain = embedding_near_dup_join(incoming, corpus, threshold=0.99)
-    assert plain.columns == ["id_a", "id_b", "cosine_sim"]

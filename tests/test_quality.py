@@ -212,47 +212,6 @@ def test_classifier_after_observation(spark):
     assert len(out) > 0
 
 
-def test_compression_metrics_zlib_exact_and_separation(spark):
-    """Byte-exact against Python zlib (the same library the UDF
-    calls), empty/NULL → ratio 0, and the signal separates: a
-    highly repetitive doc compresses far better than high-entropy
-    text."""
-    import zlib
-
-    from trendr_data_pipeline_spark.operators.quality import compression_metrics
-
-    texts = {
-        1: "spam " * 400,
-        2: "the quick brown fox jumps over the lazy dog " * 3,
-        3: "9f8e2c4a1b7d6e3f5a0c8b2d4e6f1a3c5b7d9e0f2a4c6b8d1e3f5a7c9b0d2e4",
-        4: "",
-        5: None,
-    }
-    df = spark.createDataFrame(
-        [(i, t) for i, t in texts.items()], "doc_id long, text string"
-    )
-    got = {r["doc_id"]: r for r in compression_metrics(df).collect()}
-    for i, t in texts.items():
-        b = (t or "").encode("utf-8")
-        assert got[i]["raw_len"] == len(b)
-        want_c = len(zlib.compress(b, 6)) if b else 0
-        assert got[i]["compressed_len"] == want_c, i
-        if b:
-            assert got[i]["compression_ratio"] == round(len(b) / want_c, 6)
-        else:
-            assert got[i]["compression_ratio"] == 0.0
-    # separation: repetitive >> natural > hex-noise
-    assert got[1]["compression_ratio"] > 10
-    assert got[1]["compression_ratio"] > got[2]["compression_ratio"]
-    assert got[2]["compression_ratio"] > got[3]["compression_ratio"]
-    # ADVICE r8: id_col is parameterized like token_entropy's
-    renamed = df.withColumnRenamed("doc_id", "uid")
-    alt = {r["uid"]: r for r in compression_metrics(renamed, id_col="uid").collect()}
-    assert {i: r["compressed_len"] for i, r in alt.items()} == {
-        i: r["compressed_len"] for i, r in got.items()
-    }
-
-
 def test_token_entropy_hand_values_and_edges(spark):
     """Hand-computed entropies under the gate's exact quantization
     (9-dp terms, 6-dp decimal accumulation), uniform and degenerate

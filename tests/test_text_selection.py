@@ -362,93 +362,6 @@ def test_shuffle_shards_python_oracle_and_balance(spark):
         assert ps == list(range(1, len(ids) + 1))
 
 
-def test_data_card_rollup_consistency(spark):
-    """c40's cube is internally consistent: the ALL/ALL row equals the
-    corpus totals, per-source rows sum to it, rates live in [0,1],
-    contam_rate is NULL exactly on test-split rows (no non-test
-    denominator), and the sampled near-dup flag covers only the
-    1-in-10 slice."""
-    from trendr_data_pipeline_spark.plans.data_card import corpus_data_card
-
-    rows = corpus_data_card(spark, SMOKE_SF).collect()
-    by = {(r["source"], r["split"]): r for r in rows}
-    tot = by[("ALL", "ALL")]
-    srcs = [r for r in rows if r["source"] != "ALL" and r["split"] == "ALL"]
-    assert sum(r["n_docs"] for r in srcs) == tot["n_docs"]
-    assert sum(r["n_tokens"] for r in srcs) == tot["n_tokens"]
-    splits = [r for r in rows if r["source"] == "ALL" and r["split"] != "ALL"]
-    assert sum(r["n_docs"] for r in splits) == tot["n_docs"]
-    assert {r["split"] for r in splits} == {"train", "val", "test"}
-    for r in rows:
-        for c in (
-            "exact_dup_rate", "near_dup_rate_sampled", "contam_rate",
-            "contam_tok_share", "pred_en_share", "low_entropy_share",
-        ):
-            v = r[c]
-            assert v is None or 0.0 <= v <= 1.0, (r["source"], r["split"], c, v)
-        if r["split"] == "test":
-            assert r["contam_rate"] is None
-            assert r["contam_tok_share"] is None
-        # severity ≤ rate is NOT a theorem, but severity must be 0
-        # exactly when the rate is 0 (no covered tokens without a hit)
-        if r["contam_rate"] == 0.0:
-            assert r["contam_tok_share"] == 0.0
-    # the signals bite on the fixture
-    assert tot["exact_dup_rate"] > 0
-    assert tot["near_dup_rate_sampled"] > 0
-    assert tot["mean_quality"] and tot["mean_entropy"]
-
-
-def test_data_card_null_and_literal_all_source_parity(spark, tmp_path):
-    """r9 ADVICE: the cube's rollup sentinel was COALESCE(source,'ALL'),
-    so a data row with a NULL source — or a literal source NAMED 'ALL'
-    — was indistinguishable from the rollup total, and the fixture
-    (non-null sources, none named 'ALL') could never catch the
-    conflation. Now the sentinel is the grouping() bit on both engines;
-    this pins Spark vs the REGISTERED oracle string on a synthetic
-    corpus that has BOTH hazards, and asserts the three populations
-    stay separate rows."""
-    import duckdb
-
-    from trendr_data_pipeline_spark.plans.registry import all_queries
-
-    rows = [
-        (
-            i,
-            None if i % 7 == 0 else ("ALL" if i % 7 == 1 else f"src{i % 3}"),
-            f"document body number {i} keeps a dozen plain words here",
-        )
-        for i in range(60)
-    ]
-    d = tmp_path / "synth"
-    d.mkdir()
-    spark.createDataFrame(rows, "doc_id long, source string, text string").coalesce(
-        1
-    ).write.parquet(str(d / "documents.parquet"))
-
-    q = all_queries()["c40_data_card"]
-    got = sorted(
-        (tuple(r) for r in q.fn(spark, str(d)).collect()), key=repr
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
-    )
-    want = sorted((tuple(r) for r in con.sql(q.oracle).fetchall()), key=repr)
-    assert got == want and got
-    srcs = {r[0] for r in got}
-    # NULL (data), 'ALL' (data) and 'ALL'-as-rollup must all appear —
-    # and the literal-'ALL' detail rows must NOT absorb the totals
-    assert None in srcs and "ALL" in srcs
-    all_total = [r for r in got if r[0] == "ALL" and r[1] == "ALL"]
-    # one rollup grand total + (possibly) one ('ALL' source × 'ALL'
-    # rollup-over-splits) detail row — the populations stay separate
-    n_docs = {r[2] for r in all_total}
-    assert 60 in n_docs  # the grand total survives
-    lit_all = sum(1 for r in rows if r[1] == "ALL")
-    assert lit_all in n_docs and lit_all != 60  # the literal-'ALL' source row too
-
-
 def test_write_training_shards_layout_order_and_rerun(spark, tmp_path):
     """⊕D17's materialization: out_dir/shard=N/ dirs, rows readable in
     position order file-by-file (part files pos-range-disjoint, order
@@ -673,77 +586,3 @@ def test_bm25_capped_leg_recall_and_error_bound(spark):
     assert rows and {c for c in rows[0].asDict()} == {
         "query_id", "doc_id", "bm25", "rk"
     }
-
-
-def test_incremental_data_card_converges_and_noop(spark):
-    """c44's operator beyond the gate hash: (1) the incremental card
-    over an O(delta) feature merge equals the from-scratch v2 card
-    ROW FOR ROW (Spark-side, no oracle in the loop); (2) an empty
-    delta reduces to re-aggregating the maintained frame (same card
-    as v1's); (3) the merged feature frame's doc set is exactly v2's
-    (no ghost rows from removed/modified docs)."""
-    from pyspark.sql import functions as F
-
-    from trendr_data_pipeline_spark.io import read_table
-    from trendr_data_pipeline_spark.plans.data_card import (
-        card_from_features,
-        doc_card_features,
-        incremental_data_card,
-    )
-    from trendr_data_pipeline_spark.plans.dedup_ops import v2_snapshot
-
-    def rows(df):
-        return sorted((tuple(r) for r in df.collect()), key=repr)
-
-    v1 = read_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
-    v2 = v2_snapshot(v1)
-    feat_v1 = doc_card_features(v1).localCheckpoint(eager=True)
-
-    got = incremental_data_card(feat_v1, v1, v2)
-    want = card_from_features(doc_card_features(v2))
-    assert rows(got) == rows(want) and got.count() >= 2
-
-    # empty delta: v2 == v1
-    noop = incremental_data_card(feat_v1, v1, v1)
-    assert rows(noop) == rows(card_from_features(feat_v1))
-
-    # merged frame tracks v2's id set exactly
-    from trendr_data_pipeline_spark.operators.ingestion import snapshot_diff
-
-    diff = snapshot_diff(v1, v2)
-    gone = diff.filter(F.col("status").isin("removed", "modified")).select("doc_id")
-    changed = diff.filter(F.col("status").isin("added", "modified")).select("doc_id")
-    merged = feat_v1.join(gone, "doc_id", "left_anti").unionByName(
-        doc_card_features(v2.join(changed, "doc_id", "left_semi"))
-    )
-    assert sorted(r["doc_id"] for r in merged.select("doc_id").collect()) == sorted(
-        r["doc_id"] for r in v2.select("doc_id").collect()
-    )
-
-
-def test_source_overlap_matrix_hand_built(spark):
-    """⊕A21 (r10), hand-built: known distinct 3-gram sets per source →
-    exact containments/Jaccard; zero-overlap pairs are INCLUDED with
-    inter_grams = 0; intra-source duplicate text does not inflate the
-    distinct set; a source with no >=3-token doc is absent."""
-    from trendr_data_pipeline_spark.operators.sampling import source_overlap_matrix
-
-    docs = spark.createDataFrame(
-        [
-            ("A", "w1 w2 w3 w4"),   # grams {w1w2w3, w2w3w4}
-            ("A", "w1 w2 w3 w4"),   # duplicate doc — no inflation
-            ("B", "w1 w2 w3 x"),    # grams {w1w2w3, w2w3x}
-            ("C", "z1 z2 z3"),      # grams {z1z2z3} — disjoint
-            ("D", "t1 t2"),         # too short — source absent
-        ],
-        "source string, text string",
-    )
-    rows = {(r["source_a"], r["source_b"]): r for r in source_overlap_matrix(docs).collect()}
-    assert set(rows) == {("A", "B"), ("A", "C"), ("B", "C")}
-    ab = rows[("A", "B")]
-    assert ab["grams_a"] == 2 and ab["grams_b"] == 2 and ab["inter_grams"] == 1
-    assert ab["containment_a_in_b"] == 0.5 and ab["containment_b_in_a"] == 0.5
-    assert abs(ab["jaccard"] - round(1 / 3, 6)) < 1e-9
-    for pair in (("A", "C"), ("B", "C")):
-        r = rows[pair]
-        assert r["inter_grams"] == 0 and r["jaccard"] == 0.0

@@ -3,8 +3,8 @@
 A from-scratch, idiomatic-Spark re-expression of the query and
 data-processing capabilities of the trendr.data-pipeline reference
 (POI trend-discovery ETL), plus corpus/LLM-training-data operators
-(dedup, in-query similarity search, text analysis) that no POI path
-calls. The only published-directory swap is the refresh sink's
+(dedup, embedding near-dup screening, text analysis) that no POI
+path calls. The only published-directory swap is the refresh sink's
 per-bucket swap (``streaming/jobs``).
 
 Package map
@@ -25,7 +25,7 @@ __version__ = "0.1.0"
 
 # allocator tuning at import: covers the driver AND every PySpark
 # worker (workers import the package when unpickling UDFs) — see
-# _malloctune's measured rationale; no-op off glibc, env-overridable
+# _malloctune's measured rationale; no-op off glibc
 from . import _malloctune as _mt
 
 _mt.tune_malloc()

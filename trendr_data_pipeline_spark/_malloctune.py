@@ -6,40 +6,38 @@ VM, first-touch page faults on freshly mmap'd memory run at ~8 MB/s
 glibc's default M_MMAP_THRESHOLD (128 KB, dynamic) routes every large
 allocation through a fresh ``mmap`` and every free through ``munmap``,
 so the SAME buffer sizes re-fault on EVERY expression evaluation —
-an Arrow/pandas UDF that builds a (batch × ksub) distance matrix per
-batch re-pays the fault bill per call. Raising the mmap threshold
-keeps those buffers on the sbrk heap, and raising the trim threshold
-stops ``free`` from returning the heap to the kernel, so pages fault
-once per process and are reused:
+an Arrow/pandas UDF that builds a large numpy temporary per batch
+re-pays the fault bill per call. Raising the mmap threshold keeps
+those buffers on the sbrk heap, and raising the trim threshold stops
+``free`` from returning the heap to the kernel, so pages fault once
+per process and are reused:
 
     (2000×8)@(8×2000) matmul, fresh result buffer each call:
         default tunables:   0.80 s per call (steady state)
         tuned:              0.002 s per call  (~400×)
-    c24_ivfpq_topk end-to-end (median of reps): 10-14 s → ~2.1 s
+
+The effect on the POI city cycle (``poi_cycle``) has not been
+measured.
 
 This is allocator configuration, not caching: every query still
 computes from its inputs; only the page-fault churn per allocation
-changes. Production posture: long-running executors tune glibc the
-same way (arena/trim/mmap tunables are standard practice for
-Python-worker-heavy Spark deployments); the thresholds chosen keep
-at most ~256 MB of free heap per arena resident, bounded and small
-against executor memory budgets.
+changes. The threshold keeps at most ~256 MB of free heap per arena
+resident, bounded and small against executor memory budgets.
 
-Called at package import, so it covers BOTH the driver process and
-every PySpark worker (workers import this package when unpickling
-UDFs, before any data-path allocation). ``mallopt`` only affects
-allocations made after the call; it is a no-op (with a warning
-suppressed) on non-glibc platforms. Opt out / resize via
-``SPARK_GRAFT_MALLOC_THRESHOLD`` (bytes; 0 disables).
+:func:`tune_malloc` runs at package import, so it covers BOTH the
+driver process and every PySpark worker (workers import this package
+when unpickling UDFs, before any data-path allocation). ``mallopt``
+only affects allocations made after the call; it is a no-op on
+non-glibc platforms. ``session.get_spark`` hands the same
+:data:`THRESHOLD_BYTES` to the JVM it launches (and the workers that
+JVM spawns) through ``MALLOC_MMAP_THRESHOLD_``/``MALLOC_TRIM_THRESHOLD_``.
 """
 
 from __future__ import annotations
 
-import os
-
 _M_TRIM_THRESHOLD = -1
 _M_MMAP_THRESHOLD = -3
-_DEFAULT_BYTES = 256 * 1024 * 1024
+THRESHOLD_BYTES = 256 * 1024 * 1024
 
 _applied = False
 
@@ -51,19 +49,13 @@ def tune_malloc() -> bool:
     if _applied:
         return True
     try:
-        threshold = int(
-            os.environ.get("SPARK_GRAFT_MALLOC_THRESHOLD", str(_DEFAULT_BYTES))
-        )
-    except ValueError:
-        threshold = _DEFAULT_BYTES
-    if threshold <= 0:
-        return False
-    try:
         import ctypes
 
         libc = ctypes.CDLL("libc.so.6")
-        ok = bool(libc.mallopt(_M_MMAP_THRESHOLD, threshold)) and bool(
-            libc.mallopt(_M_TRIM_THRESHOLD, threshold)
+        libc.mallopt.argtypes = [ctypes.c_int, ctypes.c_int]
+        libc.mallopt.restype = ctypes.c_int
+        ok = bool(libc.mallopt(_M_MMAP_THRESHOLD, THRESHOLD_BYTES)) and bool(
+            libc.mallopt(_M_TRIM_THRESHOLD, THRESHOLD_BYTES)
         )
     except Exception:  # noqa: BLE001 — non-glibc / restricted loader
         return False

@@ -18,19 +18,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: Dimension tables small enough to broadcast at any realistic scale.
-BROADCAST_TABLES = frozenset({"region", "nation", "source_catalog", "city_profiles"})
-
 
 def link_or_copy(src: str, dst: str) -> None:
     """Hard-link ``src`` to ``dst``, falling back to a byte copy on
     mounts that support rename but not links (NFS/FUSE/overlay).
-    The ONE copy of the posture shared by the partitioned merge sink
-    and the index-artifact lifecycle (zero data movement on POSIX,
-    graceful degradation elsewhere)."""
-    import os
+    Used by the partitioned merge sink (``streaming/jobs``) to carry
+    the files an update wave did not touch into the bucket's new
+    version (zero data movement on POSIX, graceful degradation
+    elsewhere)."""
     import shutil
 
     try:

@@ -16,8 +16,8 @@ Corpus/LLM-data operators (no POI caller):
 
 - ``dedup``       : exact, prefix-filtered Jaccard, MinHash-LSH, SimHash
 - ``graph``       : connected components over near-dup pairs
-- ``similarity``  : embedding cosine top-k (brute-force, LSH, IVF, PQ),
-  trained and searched within one query; no index is persisted
+- ``similarity``  : exact cosine top-k and embedding near-dup pairs
+  (sign-bit LSH candidates, exact verify)
 - ``quality``, ``quality_model`` : document quality metrics and model
 - ``sampling``, ``packing``, ``vectorize`` : mixture sampling,
   sequence packing, feature hashing

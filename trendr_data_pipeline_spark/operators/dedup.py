@@ -1544,9 +1544,7 @@ def contaminated_runs(
     benchmark's gram set — so a doc quoting a whole eval answer
     reports one LONG run (the severity the binary flag understates,
     pytest-pinned), while an incidental 8-token collision reports
-    exactly n. Feeds the c40 data card's ``contam_tok_share``
-    severity column (covered positions / doc tokens) and the removal
-    path below.
+    exactly n. Feeds the c43 gate and the removal path below.
 
     Scale shape: identical to :func:`maximal_duplicated_runs` except
     the "duplicated" set is the benchmark's grams — the corpus side

@@ -38,7 +38,6 @@ __all__ = [
     "lines_of",
     "dedup_lines",
     "repetition_metrics",
-    "compression_metrics",
     "token_entropy",
 ]
 
@@ -195,63 +194,13 @@ def repetition_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def compression_metrics(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Compression-ratio quality signal — the zlib-ratio heuristic
-    (public curation practice, e.g. RedPajama-v2's
-    ``ccnet_length``/compression quality slots and the
-    entropy-adjacent Gopher screens): highly repetitive or
-    low-entropy documents compress far better than natural prose, so
-    ``raw_len / deflate_len`` flags machine-generated boilerplate and
-    spam that token-level repetition filters (T8) can miss when the
-    repetition unit is long or interleaved.
-
-    Arrow-batched pandas UDF (zlib level 6 — the fixed default, so
-    the score is reproducible), one projection, zero shuffles.
-    Empty/NULL texts get ratio 0.0 (nothing to compress, not
-    "infinitely compressible"). Returns (doc_id, raw_len,
-    compressed_len, compression_ratio) — ratio rounded to 6 dp for
-    engine-stable downstream comparisons. No SQL oracle (DuckDB has
-    no zlib); the pytest oracle is byte-exact against Python zlib —
-    the same library the UDF calls."""
-    import pandas as pd
-
-    # plain-function registration (no type hints): Series→DataFrame
-    # is how a struct-returning scalar pandas UDF is expressed, but
-    # the hint-based inference rejects that signature — the minhash
-    # UDF uses the same registration style
-    def lens(s):
-        import zlib
-
-        raw, comp = [], []
-        for t in s:
-            b = (t or "").encode("utf-8")
-            raw.append(len(b))
-            comp.append(len(zlib.compress(b, 6)) if b else 0)
-        return pd.DataFrame({"raw_len": raw, "compressed_len": comp})
-
-    lens_udf = F.pandas_udf(lens, "struct<raw_len: long, compressed_len: long>")
-    out = docs.select(id_col, lens_udf(F.col(text_col)).alias("z"))
-    ratio = F.when(
-        F.col("z.compressed_len") > 0,
-        F.round(F.col("z.raw_len") * 1.0 / F.col("z.compressed_len"), 6),
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        id_col,
-        F.col("z.raw_len").alias("raw_len"),
-        F.col("z.compressed_len").alias("compressed_len"),
-        ratio.alias("compression_ratio"),
-    )
-
-
 def token_entropy(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """⊕T22 — per-document unigram token entropy in nats:
     H = −Σ (c/n)·ln(c/n) over the doc's own token distribution. The
     diversity twin of the repetition filters: near-zero H flags
     one-token spam that slips length screens, low H flags template
-    boilerplate, and unlike the zlib ratio (t16) it is EXACTLY
-    SQL-expressible, so it carries a DuckDB hash oracle.
+    boilerplate, and it is EXACTLY SQL-expressible, so it carries a
+    DuckDB hash oracle.
 
     Spark shape: document-local and SHUFFLE-FREE, like every metric
     in this module — run lengths of the sorted token array via one

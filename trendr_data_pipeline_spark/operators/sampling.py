@@ -506,75 +506,3 @@ def write_training_shards(
         .parquet(out_dir)
     )
 
-
-def source_overlap_matrix(
-    docs: DataFrame,
-    n: int = 3,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """⊕A21 (r10) — cross-source n-gram OVERLAP matrix: for every
-    unordered source pair, how much of each source's distinct word
-    n-gram set the other already contains — the corpus-composition
-    audit mixture design runs before choosing weights (public
-    practice: the inter-dataset overlap tables in the Pile/Dolma
-    reports). High containment(a in b) means source a adds little
-    novelty over b (upweighting both double-counts the same text);
-    the exact-dup/near-dup family answers this per DOCUMENT, this
-    answers it per SOURCE.
-
-    Returns one row per pair (source_a < source_b): (source_a,
-    source_b, grams_a, grams_b, inter_grams, containment_a_in_b,
-    containment_b_in_a, jaccard) — ratios rounded to 6. Pairs with
-    zero overlap are INCLUDED (inter_grams = 0; absence of overlap is
-    the finding); a source with no ≥n-token text is absent entirely.
-
-    Scale shape: one distinct over (source, gram-hash) — the only
-    corpus-scale exchange — then one gram-keyed collect_set whose
-    arrays are bounded by #SOURCES, pair generation by bounded array
-    explode (≤ s²/2 rows per gram), and a map-side-combined count
-    onto ≤ s²/2 keys. The domain assumption making that bound safe:
-    ``source`` is a MIXTURE COMPONENT (dozens to hundreds — the
-    GPT-3/Llama table grain), not a web domain; a domains-grain
-    overlap needs the d02 inverted-index machinery instead. Grams
-    travel as 64-bit hashes (:func:`word_ngram_hashes`, the d05
-    collision posture).
-    """
-    from .dedup import word_ngram_hashes
-
-    sg = (
-        docs.select(
-            F.col(source_col).alias("source"),
-            F.explode(word_ngram_hashes(F.col(text_col), n)).alias("gram"),
-        )
-        .distinct()
-    )
-    sizes = sg.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
-    per_gram = sg.groupBy("gram").agg(F.array_sort(F.collect_set("source")).alias("srcs"))
-    lhs = per_gram.select(F.posexplode("srcs").alias("i", "source_a"), F.col("srcs"))
-    pairs = lhs.select(
-        "source_a",
-        F.explode(
-            F.slice(F.col("srcs"), F.col("i") + F.lit(2), F.size("srcs"))
-        ).alias("source_b"),
-    )
-    inter = pairs.groupBy("source_a", "source_b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("inter_grams")
-    )
-    a = sizes.select(F.col("source").alias("source_a"), F.col("n_grams").alias("grams_a"))
-    b = sizes.select(F.col("source").alias("source_b"), F.col("n_grams").alias("grams_b"))
-    allp = a.join(b, F.col("source_a") < F.col("source_b"))
-    out = allp.join(inter, ["source_a", "source_b"], "left").withColumn(
-        "inter_grams", F.coalesce(F.col("inter_grams"), F.lit(0).cast("bigint"))
-    )
-    i = F.col("inter_grams").cast("double")
-    return out.select(
-        "source_a",
-        "source_b",
-        "grams_a",
-        "grams_b",
-        "inter_grams",
-        F.round(i / F.col("grams_a"), 6).alias("containment_a_in_b"),
-        F.round(i / F.col("grams_b"), 6).alias("containment_b_in_a"),
-        F.round(i / (F.col("grams_a") + F.col("grams_b") - i), 6).alias("jaccard"),
-    )

@@ -76,7 +76,7 @@ def assemble_dense(
 ) -> DataFrame:
     """Dense ``array<double>`` per doc from the sparse rows (zeros
     filled) — the shape the similarity operators consume, so hashed
-    text vectors drop straight into cosine/LSH/IVF/PQ.
+    text vectors drop straight into the cosine operators.
 
     Docs with NO sparse rows (token-less, or every bucket cancelled
     to 0 under the signed hash — probability ~1/dim² per colliding

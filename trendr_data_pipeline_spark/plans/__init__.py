@@ -19,12 +19,10 @@ def load_all() -> None:
     """Import every query module (idempotent)."""
     from . import text_ops  # noqa: F401
     from . import dedup_ops  # noqa: F401
-    from . import similarity_ops  # noqa: F401
     from . import reference_ops  # noqa: F401
     from . import events_ops  # noqa: F401
     from . import scalar_ops  # noqa: F401
     from . import pipeline_ops  # noqa: F401
-    from . import data_card  # noqa: F401
     from . import decontam_ops  # noqa: F401
     from . import layout_ops  # noqa: F401
     from . import spatial_ops  # noqa: F401

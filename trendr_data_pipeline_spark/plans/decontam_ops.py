@@ -3,19 +3,17 @@
 ⊕D7's flag answers "does this doc share any 8-gram with the eval
 set"; the c39/c41 ExactSubstr machinery upgrades that bit to SPANS:
 which token intervals are contaminated, and how long — extent and
-position. The gate is self-contained the way c40's contamination leg
-is: the benchmark is the TEST split's own documents (split via c34's
-hash CASE), the screened corpus is train/val, so no external fixture
-is needed and the oracle composes from the stage gates' own SQL
-fragments (c39's gram/island CTEs with the duplicated-gram set
-replaced by the test split's gram set, c34's split CASE imported from
-its single SQL home).
+position. The gate is self-contained: the benchmark is the TEST
+split's own documents (split via c34's hash CASE), the screened
+corpus is train/val, so no external fixture is needed and the oracle
+composes from the stage gates' own SQL fragments (c39's gram/island
+CTEs with the duplicated-gram set replaced by the test split's gram
+set, c34's split CASE imported from its single SQL home).
 
 A doc quoting a whole eval answer reports ONE long run (the severity
 the binary flag understates — pytest-pinned with exactly that case);
 an incidental 8-token collision reports run_toks = 8. The run frame
-feeds the c40 data card's ``contam_tok_share`` severity column and
-``remove_contaminated_runs`` (the rewrite path via the shared
+feeds ``remove_contaminated_runs`` (the rewrite path via the shared
 ``_rebuild_without``).
 
 Scale shape (the c39 posture, corpus side never self-joins): one
@@ -71,13 +69,12 @@ _SQL_CONTAM_RUNS = f"""
     doc="""Benchmark decontamination at RUN grain (⊕D7 upgraded via
     the c39 machinery, r10 — verdict item 4): per train/val document,
     the maximal token runs covered by an 8-gram occurring in the TEST
-    split (the self-contained benchmark, c40's device) —
+    split (the self-contained benchmark) —
     (doc_id, start_pos, end_pos, run_toks), 1-based inclusive. The
     c39 window≡substring union argument transfers with the
     duplicated-gram set replaced by the benchmark's gram set. Grams
     travel as 64-bit hashes Spark-side vs string grams in the oracle
-    (the d05/D7 collision posture, ~2⁻⁶⁴/pair). Feeds c40's
-    contam_tok_share severity column and the
+    (the d05/D7 collision posture, ~2⁻⁶⁴/pair). Feeds the
     remove_contaminated_runs rewrite.""",
 )
 def c43_contaminated_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,7 +135,7 @@ _SQL_FUZZY_DECONTAM = f"""
     "c46_fuzzy_decontam",
     _SQL_FUZZY_DECONTAM,
     doc="""Doc-level FUZZY decontamination (⊕D22, r10): every train/val
-    document screened against the TEST split (c40/c43's
+    document screened against the TEST split (c43's
     self-contained benchmark device) by word 3-gram shingle-SET
     Jaccard — the GPT-3-appendix screen that catches paraphrased or
     partially-edited eval material the exact-gram family (⊕D7 flag,

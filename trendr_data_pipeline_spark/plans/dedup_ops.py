@@ -303,8 +303,8 @@ def d04_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: the recursive-closure CTE chain over the 1-in-10 slice's exact
 #: Jaccard pairs — single SQL home, shared by the x03 and c49 oracles
-#: (the c40 import-not-copy rule: two hand-kept closures could
-#: disagree about component membership with no test linking them)
+#: (imported, never copied: two hand-kept closures could disagree
+#: about component membership with no test linking them)
 _SQL_CLOSURE_CTES = f"""t AS (
         SELECT doc_id AS id, {_SQL_TOKSET} AS toks FROM documents
         WHERE doc_id % 10 = 0 AND len({_SQL_TOKSET}) > 0
@@ -538,8 +538,8 @@ def x21_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     removal counts; the oracle rebuilds the same keep-one rule with
     string grams (hash collisions ~2⁻⁶⁴/pair the only divergence,
     the x13/d05 posture). Rotated INTO the driver's 50-name window in
-    r6's final rotation (the last never-driver-signed oracle pair,
-    with c24); also checked by tools/verify_local.""",
+    r6's final rotation (the last never-driver-signed oracle gate);
+    also checked by tools/verify_local.""",
 )
 def c25_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import remove_duplicated_spans
@@ -664,8 +664,7 @@ def t12_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: deterministic v2 snapshot derivation (drop %11, revise %7, re-add
-#: %13 under new ids) — shared by the c33 diff gate and the c44
-#: incremental card so an edit here propagates to both oracles
+#: %13 under new ids) — the c33 diff gate's second snapshot
 SQL_V2_SNAPSHOT = """
         SELECT doc_id,
                CASE WHEN doc_id % 7 = 0 THEN text || ' rev' ELSE text END AS text
@@ -677,8 +676,8 @@ SQL_V2_SNAPSHOT = """
 
 
 def v2_snapshot(docs):
-    """Spark twin of :data:`SQL_V2_SNAPSHOT` (same sharing argument).
-    ``docs`` must carry (doc_id, text)."""
+    """Spark twin of :data:`SQL_V2_SNAPSHOT`. ``docs`` must carry
+    (doc_id, text)."""
     return (
         docs.filter(F.col("doc_id") % 11 != 0)
         .select(

@@ -260,8 +260,9 @@ def r01_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # z-pushed r10 (freeze rule): admits c44_incremental_data_card into
-    # the driver window; r9-signed as r02 in CORRECTNESS_r09.json
+    # z-pushed r10 (freeze rule): admitted c44_incremental_data_card
+    # (since removed — bench.REMOVED_GATES) into the driver window;
+    # r9-signed as r02 in CORRECTNESS_r09.json
     "zr02_windowed_dedup",
     f"""
     WITH m AS (

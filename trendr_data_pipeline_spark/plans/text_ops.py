@@ -149,8 +149,8 @@ _LANG_ORDER = ["en", "fr", "de", "es", "zh"]
 
 def lang_hit_columns(frame: DataFrame, toks_col: str = "toks") -> DataFrame:
     """Append per-language marker-hit counts (``hits_<lang>``) to a
-    frame carrying a token-array column — shared by t02 and the c40
-    data card so both run the SAME language-ID machinery."""
+    frame carrying a token-array column (t02's language-ID
+    machinery)."""
     for lang, markers in _MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
         frame = frame.withColumn(
@@ -981,8 +981,8 @@ def zipf_synthetic_docs(
 @register(
     "zc42_bm25_capped_topk",
     None,
-    doc="""BM25 df_cap production leg (r10, verdict item 3 — the
-    x02/x12 bench-only fast-leg device): ``bm25_topk`` with
+    doc="""BM25 df_cap production leg (r10, verdict item 3 — a
+    bench-only fast leg): ``bm25_topk`` with
     df_cap = N/2 over a deterministic ZIPF-vocabulary corpus sized to
     the fixture's document count. Bench-only by construction (z-named
     past the driver window, no oracle — the cap is deliberately
@@ -1290,7 +1290,7 @@ def x16_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENTIRE sparse matrix. One token explode + one map-side-combined
     (doc, bucket) shuffle, all JVM expressions. The dense-assembly
     companion (`operators/vectorize.assemble_dense`) feeds these
-    vectors straight into the cosine/LSH/IVF/PQ operators
+    vectors straight into the cosine operators
     (pytest-verified round trip). Driver-signed r5 (as c20); rotated out r6.""",
 )
 def x20_hashed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1688,9 +1688,9 @@ def t10_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: md5 hash-fraction (c34's split device) over a given id expression
 _HF = "(('0x' || substr(md5('{salt}' || CAST({id} AS VARCHAR)), 1, 8))::BIGINT)"
 
-#: c34's split CASE, single SQL home (shared with the c40 data card —
-#: review finding: two hand-kept copies of the split cuts would let
-#: the gates disagree about split membership with no test linking them)
+#: c34's split CASE, single SQL home (shared with the decontamination
+#: gates — two hand-kept copies of the split cuts would let the gates
+#: disagree about split membership with no test linking them)
 SQL_SPLIT_CASE = f"""CASE
              WHEN {_HF.format(salt="split", id="doc_id")} / 4294967296.0 < 0.8
                  THEN 'train'
@@ -1755,23 +1755,6 @@ def t15_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_col="lang",
         k=20,
     )
-
-
-@register(
-    "t16_compression_ratio",
-    None,
-    doc="""Compression-ratio quality signal (⊕, r8; the zlib-ratio
-    curation heuristic): raw/deflate byte lengths + ratio per doc,
-    one Arrow projection, zero shuffles. No SQL oracle (DuckDB has
-    no zlib) — the driver records the rows-only check; the pytest
-    oracle is byte-exact against Python zlib (the same library the
-    UDF calls), and separation on constructed repetitive-vs-natural
-    corpora is pinned in tests/test_quality.py.""",
-)
-def t16_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quality import compression_metrics
-
-    return compression_metrics(read_table(spark, sf_dir, "documents"))
 
 
 @register(

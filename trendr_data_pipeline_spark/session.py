@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ._malloctune import THRESHOLD_BYTES
+
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -50,10 +52,8 @@ def get_spark(app_name: str = "trendr-spark", cpus: str | int | None = None) -> 
     # Python workers it spawns): same rationale/values as
     # _malloctune.tune_malloc (which covers processes already running);
     # glibc reads these at process start
-    thresh = os.environ.get("SPARK_GRAFT_MALLOC_THRESHOLD", str(256 * 1024 * 1024))
-    if thresh != "0":
-        os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", thresh)
-        os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", thresh)
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(THRESHOLD_BYTES))
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(THRESHOLD_BYTES))
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
