@@ -1512,3 +1512,45 @@ def test_benchmark_contamination_report_hand_built(spark):
         for r in benchmark_contamination_report(corpus, bench, n=8).collect()
     }
     assert got == {100: (2, 20), 101: (1, 8), 102: (0, 0)}
+
+
+def test_embedding_near_dup_join_corpus_extra_cols(spark):
+    """r13-opt O7 surface: corpus-side passthrough columns ride the
+    candidate distinct and land after cosine_sim; the default ()
+    keeps the historical 3-column schema byte-identical. A corpus id
+    present under two tag values yields one pair row per value."""
+    import numpy as np
+
+    from trendr_data_pipeline_spark.operators.similarity import (
+        embedding_near_dup_join,
+    )
+
+    r = np.random.RandomState(42)
+    v = r.randn(64)
+    v = v / np.linalg.norm(v)
+    w = r.randn(64)
+    w = w / np.linalg.norm(w)  # isotropic: cos(v, w) far below 0.99
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in vec], t) for i, vec, t in rows],
+            "vec_id long, embedding array<double>, tag string",
+        )
+
+    incoming = frame([(10, v, "q")]).select("vec_id", "embedding")
+    corpus = frame(
+        [(1, v, "a"), (1, v, "b"), (2, w, "a")]  # id 1 under BOTH tags
+    )
+
+    got = embedding_near_dup_join(
+        incoming, corpus, threshold=0.99, corpus_extra_cols=("tag",)
+    ).collect()
+    assert sorted((r["id_a"], r["id_b"], r["tag"]) for r in got) == [
+        (10, 1, "a"),
+        (10, 1, "b"),
+    ]
+    assert all(abs(r["cosine_sim"] - 1.0) < 1e-6 for r in got)
+
+    # default: schema unchanged from the pre-passthrough contract
+    plain = embedding_near_dup_join(incoming, corpus, threshold=0.99)
+    assert plain.columns == ["id_a", "id_b", "cosine_sim"]

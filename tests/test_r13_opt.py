@@ -1,7 +1,7 @@
 """Focused pins for the r13 optimization-round internals changes.
 
-O1 — glibc allocator tuning (`_malloctune`): applied at package import.
-O2 — the replay harness pins
+O1 — glibc allocator tuning (`_malloctune`): applied at package import,
+opt-out honored. O2 — the replay harness pins
 ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for the replay
 query's lifetime; the session value must be RESTORED afterwards (a leak
 would silently change watermark semantics for the other streaming
@@ -29,6 +29,23 @@ def test_malloctune_applied_at_package_import():
     )
     # glibc on this box: the import hook must have applied the tunables
     assert out.stdout.strip() == "True"
+
+
+def test_malloctune_opt_out_via_env():
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os; os.environ['SPARK_GRAFT_MALLOC_THRESHOLD']='0';"
+            "import trendr_data_pipeline_spark as p;"
+            "from trendr_data_pipeline_spark import _malloctune as m;"
+            "print(m._applied, m.tune_malloc())",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "False False"
 
 
 def test_replay_waves_restores_session_confs(spark):

@@ -12,6 +12,8 @@
 2. ``cadence_gated_append`` fails loudly on null timestamps (r13
    ADVICE: the numpy rewrite would otherwise map NaT to int64-min and
    silently emit/drop the row while poisoning the stored last_ts).
+3. ``embedding_near_dup_join`` rejects ``corpus_extra_cols`` that
+   collide with its internal column names (r13 ADVICE).
 """
 
 from __future__ import annotations
@@ -69,3 +71,19 @@ def test_cadence_state_fn_raises_on_null_ts(spark):
             "r14opt_nat_check",
             shuffle_partitions="2",
         ).collect()
+
+
+def test_near_dup_join_rejects_reserved_extra_cols(spark):
+    from trendr_data_pipeline_spark.operators.similarity import (
+        embedding_near_dup_join,
+    )
+
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, [0.0] * 4)], "vec_id long, embedding array<double>"
+    ).withColumn("c_id", F.lit(1))
+    with pytest.raises(ValueError, match="corpus_extra_cols"):
+        embedding_near_dup_join(
+            df, df, 0.9, dim=4, corpus_extra_cols=("c_id",)
+        )

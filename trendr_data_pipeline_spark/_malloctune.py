@@ -29,11 +29,15 @@ driver process and every PySpark worker (workers import this package
 when unpickling UDFs, before any data-path allocation). ``mallopt``
 only affects allocations made after the call; it is a no-op on
 non-glibc platforms. ``session.get_spark`` hands the same
-:data:`THRESHOLD_BYTES` to the JVM it launches (and the workers that
+:func:`threshold_bytes` to the JVM it launches (and the workers that
 JVM spawns) through ``MALLOC_MMAP_THRESHOLD_``/``MALLOC_TRIM_THRESHOLD_``.
+Resize or opt out via ``SPARK_GRAFT_MALLOC_THRESHOLD`` (bytes; 0
+disables); :data:`THRESHOLD_BYTES` is the default.
 """
 
 from __future__ import annotations
+
+import os
 
 _M_TRIM_THRESHOLD = -1
 _M_MMAP_THRESHOLD = -3
@@ -42,20 +46,35 @@ THRESHOLD_BYTES = 256 * 1024 * 1024
 _applied = False
 
 
+def threshold_bytes() -> int:
+    """The mmap/trim threshold in bytes: ``SPARK_GRAFT_MALLOC_THRESHOLD``
+    when set to an integer, else :data:`THRESHOLD_BYTES`. A value ≤ 0
+    means no tuning."""
+    try:
+        return int(
+            os.environ.get("SPARK_GRAFT_MALLOC_THRESHOLD", str(THRESHOLD_BYTES))
+        )
+    except ValueError:
+        return THRESHOLD_BYTES
+
+
 def tune_malloc() -> bool:
     """Apply the mmap/trim thresholds once per process. Returns True
     when glibc accepted both tunables."""
     global _applied
     if _applied:
         return True
+    threshold = threshold_bytes()
+    if threshold <= 0:
+        return False
     try:
         import ctypes
 
         libc = ctypes.CDLL("libc.so.6")
         libc.mallopt.argtypes = [ctypes.c_int, ctypes.c_int]
         libc.mallopt.restype = ctypes.c_int
-        ok = bool(libc.mallopt(_M_MMAP_THRESHOLD, THRESHOLD_BYTES)) and bool(
-            libc.mallopt(_M_TRIM_THRESHOLD, THRESHOLD_BYTES)
+        ok = bool(libc.mallopt(_M_MMAP_THRESHOLD, threshold)) and bool(
+            libc.mallopt(_M_TRIM_THRESHOLD, threshold)
         )
     except Exception:  # noqa: BLE001 — non-glibc / restricted loader
         return False

@@ -120,6 +120,7 @@ def embedding_near_dup_join(
     tables: int = 8,
     broadcast_incoming: bool = True,
     self_join: bool = False,
+    corpus_extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Embedding-cosine near-duplicate screening: every (incoming,
     corpus) pair with cosine ≥ ``threshold`` — the embedding leg of the
@@ -135,15 +136,36 @@ def embedding_near_dup_join(
     with p ≈ 2e-7, while an isotropic background pair collides almost
     never — candidate volume stays near the true-pair count instead of
     O(n²/2^bits). Returns (id_a, id_b, cosine_sim), id_a from incoming.
+
+    ``corpus_extra_cols`` names corpus-side columns carried through to
+    the pair output unchanged (appended after ``cosine_sim``) — a
+    caller screening against a UNION of reference classes can tag each
+    class once and split the pairs afterwards instead of running one
+    join per class. Extras ride the candidate ``distinct``, so a corpus
+    id present under two tag values yields one pair row per value — by
+    design (each class applies its own keep rule).
     """
     from ..io import spread
 
+    # extras must not collide with the join's internal column names
+    # (a caller passing one of these would get an ambiguous-column
+    # error or a silently wrong select downstream)
+    _reserved = {"tbl", "bucket", "q_id", "c_id", "q_v", "c_v", "id_a", "id_b", "_cos", "cosine_sim"}
+    bad = _reserved.intersection(corpus_extra_cols)
+    if bad:
+        raise ValueError(
+            f"corpus_extra_cols collides with internal names: {sorted(bad)}"
+        )
+
     sketch = _sketch_all_tables(dim, bits, tables)
 
-    def sketched(df: DataFrame, name: str) -> DataFrame:
+    def sketched(
+        df: DataFrame, name: str, extra: tuple[str, ...] = ()
+    ) -> DataFrame:
         return df.select(
             F.col(id_col).alias(f"{name}_id"),
             F.col(vec_col).alias(f"{name}_v"),
+            *[F.col(c) for c in extra],
             F.posexplode(sketch(F.col(vec_col))).alias("tbl", "bucket"),
         )
 
@@ -163,7 +185,7 @@ def embedding_near_dup_join(
         # below (localCheckpoint) and the sketch frame unpersisted
         # before returning, so long-lived sessions don't accumulate a
         # cached frame per semantic_dedup call.
-        c_side = sketched(spread(corpus), "c").persist()
+        c_side = sketched(spread(corpus), "c", corpus_extra_cols).persist()
         q_side = c_side.select(
             F.col("c_id").alias("q_id"),
             F.col("c_v").alias("q_v"),
@@ -171,7 +193,7 @@ def embedding_near_dup_join(
             "bucket",
         )
     else:
-        c_side = sketched(spread(corpus), "c")
+        c_side = sketched(spread(corpus), "c", corpus_extra_cols)
         q_side = sketched(incoming, "q")
         if broadcast_incoming:
             q_side = F.broadcast(q_side)
@@ -184,7 +206,13 @@ def embedding_near_dup_join(
         c_side
         .join(q_side, ["tbl", "bucket"])
         .filter(orient)
-        .select(F.col("q_id").alias("id_a"), F.col("c_id").alias("id_b"), "q_v", "c_v")
+        .select(
+            F.col("q_id").alias("id_a"),
+            F.col("c_id").alias("id_b"),
+            "q_v",
+            "c_v",
+            *corpus_extra_cols,
+        )
         .distinct()
     )
     # Filter on the UNROUNDED cosine (matching the SQL oracle, which
@@ -194,7 +222,12 @@ def embedding_near_dup_join(
     out = (
         cands.withColumn("_cos", cosine(F.col("q_v"), F.col("c_v")))
         .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b", F.round(F.col("_cos"), 6).alias("cosine_sim"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(F.col("_cos"), 6).alias("cosine_sim"),
+            *corpus_extra_cols,
+        )
     )
     if symmetric:
         # materialize the VERIFIED pairs off the persisted sketch,

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ._malloctune import THRESHOLD_BYTES
+from ._malloctune import threshold_bytes
 
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -52,8 +52,10 @@ def get_spark(app_name: str = "trendr-spark", cpus: str | int | None = None) -> 
     # Python workers it spawns): same rationale/values as
     # _malloctune.tune_malloc (which covers processes already running);
     # glibc reads these at process start
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(THRESHOLD_BYTES))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(THRESHOLD_BYTES))
+    thresh = threshold_bytes()
+    if thresh > 0:
+        os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(thresh))
+        os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(thresh))
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
